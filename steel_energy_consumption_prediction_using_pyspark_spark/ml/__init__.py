@@ -1,6 +1,7 @@
 from steel_energy_consumption_prediction_using_pyspark_spark.ml.pipeline import (
     CATEGORICAL_COLS,
     NUMERIC_COLS,
+    Pipeline,
     build_pipeline,
     feature_stages,
 )
@@ -18,6 +19,7 @@ __all__ = [
     "CATEGORICAL_COLS",
     "NUMERIC_COLS",
     "METRICS",
+    "Pipeline",
     "baseline_regressors",
     "build_pipeline",
     "comparison_table",

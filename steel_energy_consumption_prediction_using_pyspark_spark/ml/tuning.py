@@ -5,6 +5,14 @@ and CrossValidator(numFolds=3) at SteelPred.py:464-473).
 `parallelism` defaults to 4 here — the reference left it at 1
 (serial grid evaluation); on a cluster raise it toward the number of
 concurrently schedulable jobs.
+
+Both wrappers call the estimator's ``fitMultiple`` once per split (per
+fold for ``cv_fit``). Given the engine's ``ml.pipeline.Pipeline`` and
+a grid over the last stage's params only (the reference grids tune the
+regressor), the feature prefix is fitted once per split and shared by
+every grid point's model; a grid that touches a feature stage fits
+the whole pipeline per grid point, as stock Spark does. The best
+model's refit on the full input fits everything once more.
 """
 
 from __future__ import annotations

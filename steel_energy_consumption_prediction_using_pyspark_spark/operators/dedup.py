@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from steel_energy_consumption_prediction_using_pyspark_spark.operators.text import (
+    arrow_string_buffers,
     fingerprint,
     normalize_text,
     shingles,
@@ -137,11 +138,7 @@ def _gram_hash32_np(strs, limit: int):
     if limit == 0:
         return np.empty(0, dtype=np.int64)
     sa = strs.slice(0, limit)
-    bufs = sa.buffers()
-    goffs = np.frombuffer(bufs[1], dtype=np.int32)[
-        sa.offset : sa.offset + len(sa) + 1
-    ]
-    mv = memoryview(bufs[2])
+    goffs, mv = arrow_string_buffers(sa)
     return np.fromiter(
         (
             int.from_bytes(md5(mv[goffs[i] : goffs[i + 1]]).digest()[:4], "big")
@@ -237,7 +234,7 @@ def _shingle_arrow(
             # gram at absolute token position p = tokens[p..p+n-1].
             M = int(offs[-1]) - (n_gram - 1)
             joined = pc.binary_join_element_wise(
-                *[vals.slice(j, M) for j in range(n_gram)], " "
+                *[vals.slice(j, M) for j in range(n_gram)], pa.scalar(" ", vals.type)
             )
             # Row-local gram positions → absolute indices into `joined`.
             cum = np.cumsum(counts) - counts

@@ -182,6 +182,26 @@ def shingles_from(toks: Column | str, n: int = 3) -> Column:
     )
 
 
+def arrow_string_buffers(arr):
+    """(offsets, data) of a flat pyarrow ``string`` or ``large_string``
+    array for zero-copy slicing: the offsets are read at the width the
+    type declares (int32 / int64) and cut to the array's slice, and a
+    None data buffer (every value empty) reads as empty bytes. Any
+    other layout raises instead of hashing misread bytes."""
+    import numpy as np
+    import pyarrow as pa
+
+    if pa.types.is_string(arr.type):
+        width = np.int32
+    elif pa.types.is_large_string(arr.type):
+        width = np.int64
+    else:
+        raise TypeError(f"expected a string or large_string array, got {arr.type}")
+    _, offs, data = arr.buffers()
+    offs = np.frombuffer(offs, dtype=width)[arr.offset : arr.offset + len(arr) + 1]
+    return offs, memoryview(data if data is not None else b"")
+
+
 def pos_grams_arrow(
     staged: DataFrame, n: int, keep: list[str]
 ) -> DataFrame:
@@ -231,7 +251,7 @@ def pos_grams_arrow(
             vals = tk.values
             M = int(offs[-1]) - (n - 1)
             joined = pc.binary_join_element_wise(
-                *[vals.slice(j, M) for j in range(n)], " "
+                *[vals.slice(j, M) for j in range(n)], pa.scalar(" ", vals.type)
             )
             cum = np.cumsum(counts) - counts
             local = np.arange(total, dtype=np.int64) - np.repeat(cum, counts)
@@ -356,13 +376,9 @@ def _winnow_arrow(
             vals = tk.values
             M = int(offs[-1]) - (k - 1)
             joined = pc.binary_join_element_wise(
-                *[vals.slice(j, M) for j in range(k)], " "
+                *[vals.slice(j, M) for j in range(k)], pa.scalar(" ", vals.type)
             )
-            jb = joined.buffers()
-            goffs = np.frombuffer(jb[1], dtype=np.int32)[
-                joined.offset : joined.offset + len(joined) + 1
-            ]
-            mv = memoryview(jb[2])
+            goffs, mv = arrow_string_buffers(joined)
             raw = np.frombuffer(
                 b"".join(
                     md5(mv[goffs[i] : goffs[i + 1]]).digest()

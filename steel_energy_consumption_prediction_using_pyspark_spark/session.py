@@ -84,6 +84,24 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else min(16g, half the host's
+    MemTotal): in local mode the driver JVM holds every task, and a
+    heap sized past physical memory gets the process OOM-killed
+    instead of spilling. 16g where MemTotal is unreadable."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(
+                int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{min(16 * 1024, total_kb // 2048)}m"
+
+
 def get_session(
     app_name: str = "steel-energy-engine",
     master: str | None = None,
@@ -109,7 +127,7 @@ def get_session(
         .master(master or f"local[{par}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or par))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

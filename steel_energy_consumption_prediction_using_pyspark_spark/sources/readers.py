@@ -10,7 +10,13 @@ The reference ingests one CSV with ``inferSchema=True, header=True``
   inference path exists only for reference parity / exploration;
 - column names are normalized on ingest (dots and parens break
   Catalyst's struct-field accessor syntax; the reference renames them
-  by hand at SteelPred.py:139-146 — we do it systematically).
+  by hand at SteelPred.py:139-146 — we do it systematically);
+- :func:`read_parquet` is the one parquet read path (fixture tables via
+  workload/util.py::T, persisted indexes, signature stores, compacted
+  tables). It resolves each source's schema once per session and
+  reuses it until the files change, so re-reading a table inside a
+  session costs no schema-inference job. Streaming readers keep their
+  own path.
 """
 
 from __future__ import annotations
@@ -59,19 +65,63 @@ def normalize_columns(df: DataFrame) -> DataFrame:
     return df.withColumnsRenamed({o: n for o, n in renames.items() if o != n})
 
 
+# Resolved parquet schemas: (applicationId, absolute path) → (file
+# stamp and schema-shaping confs at inference, schema). Spark infers a
+# parquet schema with a footer-reading job on every read; a hit reads
+# with .schema(...) and runs none, and a stale stamp re-infers and
+# replaces the entry. Unlocked on purpose: two threads may both infer
+# a path's schema the first time, and both store the same StructType.
+# Cleared by workload/util.py::clear_session_caches.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _file_stamp(path: str) -> str:
+    """(size, mtime_ns) of a single file, or the nested-layout
+    fingerprint of a directory (workload/util.py::dir_fingerprint, the
+    fixture_fingerprint recipe): rewriting the data in place changes
+    the stamp, so the memoized schema is re-inferred."""
+    from ..workload.util import dir_fingerprint
+
+    if os.path.isdir(path):
+        return dir_fingerprint(path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return "absent"
+    return f"{st.st_size}:{st.st_mtime_ns}"
+
+
 def read_parquet(
     spark: SparkSession, path: str, merge_schema: bool = False
 ) -> DataFrame:
-    """Parquet scan. ``merge_schema=True`` unions the schemas of every
-    footer in the directory (columns added over a table's lifetime
-    surface as nulls in older files) — the schema-evolution read path
-    a long-lived 100 TB table needs. It costs a footer read per file
-    at planning time, so it stays opt-in; steady-state readers should
-    pass an explicit contract schema instead."""
-    reader = spark.read
+    """Parquet scan — the engine's one parquet read path (workload/util.py::T
+    and every workload reader go through it). The resolved schema is
+    memoized per session, path, file stamp and the confs that shape
+    inference, so a repeated read of unchanged data runs no schema
+    job; data rewritten in place is re-inferred.
+
+    ``merge_schema=True`` unions the schemas of every footer in the
+    directory (columns added over a table's lifetime surface as nulls
+    in older files) — the schema-evolution read path a long-lived
+    100 TB table needs. It costs a footer read per file at planning
+    time, so it stays opt-in and is never memoized."""
     if merge_schema:
-        reader = reader.option("mergeSchema", True)
-    return reader.parquet(path)
+        return spark.read.option("mergeSchema", True).parquet(path)
+    path = os.path.abspath(path)
+    key = (spark.sparkContext.applicationId, path)
+    stamp = (_file_stamp(path), *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
 
 
 def read_csv(

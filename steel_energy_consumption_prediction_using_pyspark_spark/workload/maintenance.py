@@ -27,6 +27,9 @@ from steel_energy_consumption_prediction_using_pyspark_spark.operators.increment
     merge_partials,
     partial_rollup,
 )
+from steel_energy_consumption_prediction_using_pyspark_spark.sources.readers import (
+    read_parquet,
+)
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
     T,
     dir_fingerprint,
@@ -56,7 +59,7 @@ def publish_compacted(
     this source state and the caller should just read `final_dir`.
     Raced two-process behavior is pinned by
     tests/test_cross_process.py::test_two_process_compaction_single_winner."""
-    src = spark.read.parquet(small_dir)
+    src = read_parquet(spark, small_dir)
     fp = dir_fingerprint(small_dir)
 
     def _build(tmp: str) -> None:
@@ -726,7 +729,7 @@ def _run_maintenance_scenario(
     before = _count_files(small_dir, r"part=([^/]+)/")
 
     # 2. plan on the re-read table (logical byte proxy, integer DIV)
-    small = spark.read.parquet(small_dir)
+    small = read_parquet(spark, small_dir)
     files_df = small.groupBy("part", "f").agg(
         (F.count(F.lit(1)) * F.lit(96)).alias("bytes")
     )
@@ -756,7 +759,7 @@ def _run_maintenance_scenario(
     after = _count_files(compact_dir, r"part=([^/]+)/")
 
     # 4. physical verification
-    post = spark.read.parquet(compact_dir)
+    post = read_parquet(spark, compact_dir)
 
     def _row_str(df: DataFrame):
         return F.concat_ws(

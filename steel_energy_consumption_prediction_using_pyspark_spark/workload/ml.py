@@ -25,6 +25,7 @@ from steel_energy_consumption_prediction_using_pyspark_spark.ml.models import (
     baseline_regressors,
 )
 from steel_energy_consumption_prediction_using_pyspark_spark.ml.pipeline import (
+    Pipeline,
     build_pipeline,
     feature_stages,
 )
@@ -40,8 +41,6 @@ def q_ml_feature_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature stages only (M1-M3): index 3 categoricals, assemble 9
     features, scale. Output: per-Load_Type feature stats proving the
     indexer ordinals follow frequencyDesc and the vectors exist."""
-    from pyspark.ml import Pipeline
-
     data = steel_energy(spark, QUERY_ROWS)
     model = Pipeline(stages=feature_stages()).fit(data)
     out = model.transform(data)

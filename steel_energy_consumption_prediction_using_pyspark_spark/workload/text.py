@@ -22,6 +22,9 @@ from steel_energy_consumption_prediction_using_pyspark_spark.operators import (
 from steel_energy_consumption_prediction_using_pyspark_spark.operators import (
     text as X,
 )
+from steel_energy_consumption_prediction_using_pyspark_spark.sources.readers import (
+    read_parquet,
+)
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
     T,
     fixture_fingerprint,
@@ -2450,7 +2453,7 @@ def _write_sig_store(spark: SparkSession, sf_dir: str, base: str) -> None:
         os.path.join(base, "corpus_shingled")
     )
     D.minhash_banded(
-        spark.read.parquet(os.path.join(base, "corpus_shingled"))
+        read_parquet(spark, os.path.join(base, "corpus_shingled"))
     ).write.mode("overwrite").parquet(os.path.join(base, "corpus_banded"))
     c10 = (
         d.orderBy("doc_id")
@@ -2479,8 +2482,8 @@ def q_signature_store_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     base = materialized_sig_store(spark, sf_dir)
-    sh = spark.read.parquet(os.path.join(base, "corpus_shingled"))
-    banded = spark.read.parquet(os.path.join(base, "corpus_banded"))
+    sh = read_parquet(spark, os.path.join(base, "corpus_shingled"))
+    banded = read_parquet(spark, os.path.join(base, "corpus_banded"))
     band_rows = banded.groupBy("band").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("bhash").alias("n_distinct"),
@@ -2511,9 +2514,9 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     base = materialized_sig_store(spark, sf_dir)
-    store_sh = spark.read.parquet(os.path.join(base, "corpus_shingled"))
-    store_banded = spark.read.parquet(os.path.join(base, "corpus_banded"))
-    batch = spark.read.parquet(os.path.join(base, "batch_docs"))
+    store_sh = read_parquet(spark, os.path.join(base, "corpus_shingled"))
+    store_banded = read_parquet(spark, os.path.join(base, "corpus_banded"))
+    batch = read_parquet(spark, os.path.join(base, "batch_docs"))
 
     b_sh = D.shingled_sets(batch).persist()
     b_banded = D.minhash_banded(b_sh)

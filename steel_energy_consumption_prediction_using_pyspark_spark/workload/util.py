@@ -13,6 +13,10 @@ import threading
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from steel_energy_consumption_prediction_using_pyspark_spark.sources.readers import (
+    read_parquet,
+)
+
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
@@ -334,6 +338,7 @@ def clear_session_caches() -> None:
     SparkSessions would otherwise accumulate lock objects forever).
     Lazy imports: util is imported by the workload modules that own
     the caches."""
+    from steel_energy_consumption_prediction_using_pyspark_spark.sources import readers
     from steel_energy_consumption_prediction_using_pyspark_spark.workload import (
         core,
         graph,
@@ -350,7 +355,11 @@ def clear_session_caches() -> None:
 
     locked_clear(vector._IVF_CACHE, "ivf_index", lambda v: v.unpersist())
     locked_clear(vector._PQ_CACHE, "pq_index", lambda v: v[1].unpersist())
+    # Loaded persisted-index handles and memoized parquet schemas hold
+    # no executor memory; dropping them makes the next read infer and
+    # load again.
     vector._DISK_INDEX.clear()
+    readers._SCHEMAS.clear()
     # _EDGE_CACHE builders serialize on a per-SESSION lock (they evict
     # sibling sf_dir entries), so the clear takes the same lock.
     for key in list(graph._EDGE_CACHE):
@@ -395,7 +404,7 @@ def clear_session_caches() -> None:
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanosAsLong read the ns column as raw int64; truncate to µs
         # with integer division (`div`, not `/`: the ~1.7e18 ns epoch

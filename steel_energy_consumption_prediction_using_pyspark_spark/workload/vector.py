@@ -8,6 +8,8 @@ tiebreak is fully deterministic; only displayed values are rounded.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -17,11 +19,15 @@ from steel_energy_consumption_prediction_using_pyspark_spark.operators import (
 from steel_energy_consumption_prediction_using_pyspark_spark.operators import (
     similarity as S,
 )
+from steel_energy_consumption_prediction_using_pyspark_spark.sources.readers import (
+    read_parquet,
+)
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
     KMEANS_HASH_A,
     KMEANS_HASH_M,
     KMEANS_ITERS,
     KMEANS_MAX_TRAIN,
+    PUBLISHED_MARKER,
     T,
     fixture_fingerprint,
     fs_key_lock,
@@ -1379,7 +1385,22 @@ ORACLES["semantic_dedup"] = f"""
 # unrolled quantizer oracles verify the on-disk bytes: drift between
 # what was persisted and what the twin derives breaks the hash.
 
-_DISK_INDEX: set[tuple[str, str]] = set()
+class _LoadedIndex(NamedTuple):
+    """One published index as every later probe of the session reads
+    it: the marker stamp it was loaded under, the IVF handles, and the
+    PQ model plus code relation."""
+
+    stamp: tuple
+    ivf: "S.IvfIndex"
+    pq_model: object
+    pq_codes: DataFrame
+
+
+# (applicationId, sf_dir) → the loaded index, for every index this
+# session built or validated. A hit runs no schema, head() or
+# collect() job; the entry is dropped and reloaded when the published
+# directory's marker changes (a rebuild, here or in another process).
+_DISK_INDEX: dict[tuple[str, str], _LoadedIndex] = {}
 
 
 def _index_base(sf_dir: str) -> str:
@@ -1467,10 +1488,22 @@ def _write_ann_index(spark: SparkSession, sf_dir: str, base: str) -> None:
             fut.result()
 
 
-def materialized_ann_index(spark: SparkSession, sf_dir: str) -> str:
+def _marker_stamp(base: str) -> tuple:
+    """Identity of the published marker: a republish writes a new one."""
+    import os
+
+    try:
+        st = os.stat(os.path.join(base, PUBLISHED_MARKER))
+    except OSError:
+        return ()
+    return (st.st_ino, st.st_mtime_ns)
+
+
+def materialized_ann_index(spark: SparkSession, sf_dir: str) -> _LoadedIndex:
     """Build-if-missing accessor (the materialized_edges contract):
-    the first call per (application, sf) trains and writes the index;
-    every later call — and every probe query — only reads parquet.
+    the first call per (application, sf) trains and writes the index
+    and loads it; every later call — and every probe query — reuses
+    the loaded handles while the published directory is unchanged.
 
     Cross-process safe since round 7 (VERDICT r6 #2): the build runs
     under an fcntl lockfile and publishes atomically (build into
@@ -1490,16 +1523,25 @@ def materialized_ann_index(spark: SparkSession, sf_dir: str) -> str:
     # 32-list oracle.
     fp = f"{fixture_fingerprint(sf_dir, 'embeddings')}:ivfk{IVF_K}"
 
-    def _built() -> bool:
-        return key in _DISK_INDEX and is_published(base, fp)
+    def _loaded() -> _LoadedIndex | None:
+        hit = _DISK_INDEX.get(key)
+        if (
+            hit is not None
+            and is_published(base, fp)
+            and hit.stamp == _marker_stamp(base)
+        ):
+            return hit
+        return None
 
-    if _built():
-        return base
+    hit = _loaded()
+    if hit is not None:
+        return hit
     with key_lock("ann_disk_index", key):
-        if not _built():
+        hit = _loaded()
+        if hit is None:
             # Invalidate before the write so no lock-free reader
             # validates a half-written index (util.key_lock docstring).
-            _DISK_INDEX.discard(key)
+            _DISK_INDEX.pop(key, None)
             with fs_key_lock("ann_index", os.path.basename(base)):
                 publish_dir(
                     base,
@@ -1507,17 +1549,20 @@ def materialized_ann_index(spark: SparkSession, sf_dir: str) -> str:
                     app_id=key[0],
                     fingerprint=fp,
                 )
-            _DISK_INDEX.add(key)
-    return base
+                stamp = _marker_stamp(base)
+            model, codes = _load_pq_disk(spark, base)
+            hit = _LoadedIndex(stamp, _load_ivf_disk(spark, base), model, codes)
+            _DISK_INDEX[key] = hit
+    return hit
 
 
 def _load_ivf_disk(spark: SparkSession, base: str) -> "S.IvfIndex":
     import os
 
-    assigned = spark.read.parquet(os.path.join(base, "ivf_assigned")).select(
+    assigned = read_parquet(spark, os.path.join(base, "ivf_assigned")).select(
         "neighbor_id", "_cv", F.col("_list").cast("int").alias("_list")
     )
-    cents = spark.read.parquet(os.path.join(base, "ivf_centroids"))
+    cents = read_parquet(spark, os.path.join(base, "ivf_centroids"))
     return S.IvfIndex(assigned, cents)
 
 
@@ -1530,15 +1575,15 @@ def _load_pq_disk(spark: SparkSession, base: str):
         pq as PQ,
     )
 
-    meta = spark.read.parquet(os.path.join(base, "pq_meta")).head()
-    rows = spark.read.parquet(os.path.join(base, "pq_codebooks")).collect()
+    meta = read_parquet(spark, os.path.join(base, "pq_meta")).head()
+    rows = read_parquet(spark, os.path.join(base, "pq_codebooks")).collect()
     books: list[list[list[float]]] = [
         [None] * (len(rows) // int(meta.m)) for _ in range(int(meta.m))
     ]
     for r in rows:
         books[r.s][r.cid] = list(r.cvec)
     model = PQ.PqModel(float(meta.scale), books, int(meta.subdim))
-    enc = spark.read.parquet(os.path.join(base, "pq_codes"))
+    enc = read_parquet(spark, os.path.join(base, "pq_codes"))
     return model, enc
 
 
@@ -1565,8 +1610,9 @@ def q_ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains in one statement."""
     import os
 
-    base = materialized_ann_index(spark, sf_dir)
-    ivf = _load_ivf_disk(spark, base)
+    base = _index_base(sf_dir)
+    index = materialized_ann_index(spark, sf_dir)
+    ivf = index.ivf
 
     g = ivf.assigned.groupBy("_list").agg(
         F.count(F.lit(1)).alias("_n"), F.sum("neighbor_id").alias("_ids")
@@ -1582,7 +1628,7 @@ def q_ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    model, enc = _load_pq_disk(spark, base)
+    model, enc = index.pq_model, index.pq_codes
     m = model.m
     stacked = enc.selectExpr(
         "stack({}, {}) as (grp, code)".format(
@@ -1593,7 +1639,7 @@ def q_ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("_n"),
         F.sum("code").cast("long").alias("_ids"),
     )
-    books = spark.read.parquet(os.path.join(base, "pq_codebooks"))
+    books = read_parquet(spark, os.path.join(base, "pq_codebooks"))
     pq_chk = books.groupBy("s").agg(
         F.sum(_veci_chk(F.col("cvec"))).cast("long").alias("_chk")
     )
@@ -1606,7 +1652,7 @@ def q_ann_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     meta_row = (
-        spark.read.parquet(os.path.join(base, "pq_meta"))
+        read_parquet(spark, os.path.join(base, "pq_meta"))
         .select(
             F.lit("pq_scale").alias("tier"),
             F.lit(-1).alias("grp"),
@@ -1628,8 +1674,7 @@ def q_ivf_probe_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe-pruned at 100 TB). Shares the full unrolled quantizer oracle
     with ann_ivf/ivf_probe: the hash proves the on-disk index IS the
     index the twin derives."""
-    base = materialized_ann_index(spark, sf_dir)
-    index = _load_ivf_disk(spark, base)
+    index = materialized_ann_index(spark, sf_dir).ivf
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < N_QUERY).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1642,8 +1687,8 @@ def q_pq_probe_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     code relation — no training, no encoding in this plan; the code
     scan is the 16×-smaller serving table. Shares ann_pq's full
     unrolled oracle."""
-    base = materialized_ann_index(spark, sf_dir)
-    model, enc = _load_pq_disk(spark, base)
+    index = materialized_ann_index(spark, sf_dir)
+    model, enc = index.pq_model, index.pq_codes
     from steel_energy_consumption_prediction_using_pyspark_spark.operators import (
         pq as PQ,
     )
@@ -1666,8 +1711,7 @@ def q_rag_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     work in this plan (plan-pinned); shares rag_retrieve's whole-
     pipeline unrolled oracle, so the persisted index must reproduce
     the session-built retrieval bit for bit."""
-    base = materialized_ann_index(spark, sf_dir)
-    index = _load_ivf_disk(spark, base)
+    index = materialized_ann_index(spark, sf_dir).ivf
     e = T(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < N_QUERY).select(
         F.col("vec_id").alias("query_id"), "embedding"

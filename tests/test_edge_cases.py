@@ -121,6 +121,34 @@ def test_gram_hash32_matches_hashlib(spark):
     assert got == want
 
 
+def test_gram_hash32_kernel_offset_widths():
+    """The kernel-side gram hash reads string offsets at the declared
+    width (string: int32, large_string: int64), from a sliced array,
+    hashes an all-empty array as md5 of empty bytes, and refuses any
+    other layout instead of hashing misread bytes."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+    import pytest
+
+    from steel_energy_consumption_prediction_using_pyspark_spark.operators.dedup import (
+        _gram_hash32_np,
+    )
+
+    def want(gs):
+        return [int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in gs]
+
+    grams = ["x", "a b c", "héllo wörld", ""]
+    for typ, width in ((pa.string(), np.int32), (pa.large_string(), np.int64)):
+        arr = pa.array(["skip"] + grams, typ).slice(1)
+        assert list(_gram_hash32_np(arr, len(grams))) == want(grams)
+        assert np.frombuffer(arr.buffers()[1], dtype=width)[-1] > 0
+        assert list(_gram_hash32_np(pa.array(["", ""], typ), 2)) == want(["", ""])
+    with pytest.raises(TypeError):
+        _gram_hash32_np(pa.array([b"x"], pa.binary()), 1)
+
+
 def test_minhash_params_deterministic_and_bounded():
     from steel_energy_consumption_prediction_using_pyspark_spark.operators.dedup import (
         _minhash_params,

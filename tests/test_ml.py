@@ -19,6 +19,7 @@ from steel_energy_consumption_prediction_using_pyspark_spark.ml.models import (
     param_grids,
 )
 from steel_energy_consumption_prediction_using_pyspark_spark.ml.pipeline import (
+    Pipeline,
     build_pipeline,
     feature_stages,
     load_fitted,
@@ -357,3 +358,109 @@ def test_fm_poisson_replica_gap_adjudication(spark, split):
     poisson = build_pipeline(models["GLR_poisson"]).fit(train)
     r2_poisson = evaluate_predictions(poisson.transform(test))["r2"]
     assert 0.85 < r2_poisson < 0.94, r2_poisson  # documented mild undershoot
+
+
+# --- fused indexer fit vs stock pyspark.ml.Pipeline -------------------------
+
+
+def _stock_pipeline(stages):
+    from pyspark.ml import Pipeline as StockPipeline
+
+    return StockPipeline(stages=stages)
+
+
+def test_fused_indexers_match_stock_with_nulls_and_ties(spark):
+    """One multi-column aggregation yields the labels three one-column
+    fits yield: nulls are skipped, and frequency ties break
+    alphabetically, per column."""
+    from pyspark.ml.feature import StringIndexer
+
+    rows = [
+        (
+            None if i % 5 == 0 else "abc"[i % 3],
+            "qprs"[i % 4],  # four-way tie
+            "yx"[i % 2] if i % 7 else None,
+        )
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "a string, b string, c string")
+    stages = [StringIndexer(inputCol=c, outputCol=f"{c}_i") for c in "abc"]
+    ours = Pipeline(stages=stages).fit(df)
+    stock = _stock_pipeline(stages).fit(df)
+    assert [m.labels for m in ours.stages] == [m.labels for m in stock.stages]
+    assert ours.stages[1].labels == ["p", "q", "r", "s"]
+    assert [m.uid for m in ours.stages] == [s.uid for s in stages]
+
+
+def test_fused_pipeline_matches_stock_model(spark, split, tmp_path):
+    """Same coefficients and predictions as a stock Pipeline; saved
+    stages named {i}_StringIndexer_<estimator uid> with the stock
+    paramMap/defaultParamMap JSON; load_fitted round-trips."""
+    import glob
+    import json
+    import os
+
+    train, test = split
+    lr = baseline_regressors()["LinearRegression"]
+    stages = [*feature_stages(), lr]
+    ours = Pipeline(stages=stages).fit(train)
+    stock = _stock_pipeline(stages).fit(train)
+    assert ours.stages[-1].coefficients == stock.stages[-1].coefficients
+    assert ours.stages[-1].intercept == stock.stages[-1].intercept
+    pred = lambda m: [r.prediction for r in m.transform(test).orderBy("date").collect()]
+    assert pred(ours) == pred(stock)
+
+    a, b = str(tmp_path / "ours"), str(tmp_path / "stock")
+    save_fitted(ours, a)
+    save_fitted(stock, b)
+    dirs = sorted(os.listdir(os.path.join(a, "stages")))
+    assert dirs == sorted(os.listdir(os.path.join(b, "stages")))
+    # {i}_<uid>, and an indexer's uid is StringIndexer_<hex>.
+    assert dirs[:3] == [f"{i}_{stages[i].uid}" for i in range(3)]
+    assert all(s.uid.startswith("StringIndexer_") for s in stages[:3])
+
+    def meta(root, d):
+        (f,) = glob.glob(os.path.join(root, "stages", d, "metadata", "part-*"))
+        with open(f) as fh:
+            m = json.loads(fh.read())
+        return m["class"], m["uid"], m["paramMap"], m["defaultParamMap"]
+
+    for d in dirs:
+        assert meta(a, d) == meta(b, d)
+
+    reloaded = load_fitted(a)
+    assert [s.uid for s in reloaded.stages] == [s.uid for s in ours.stages]
+    assert [m.labels for m in reloaded.stages[:3]] == [m.labels for m in stock.stages[:3]]
+    assert pred(reloaded) == pred(stock)
+
+
+def test_fit_multiple_prefix_once_matches_stock(spark, split):
+    """A grid over last-stage params shares one fitted prefix across
+    grid points; a grid touching a prefix param (StandardScaler
+    withMean) takes pyspark's Pipeline.fitMultiple. Both yield the
+    stock models."""
+    from pyspark.ml.tuning import ParamGridBuilder
+
+    train, _ = split
+    train = train.limit(2000)
+
+    def fit_all(pipe, grid):
+        return dict(pipe.fitMultiple(train, grid))
+
+    def summary(m):
+        scaler, lrm = m.stages[4], m.stages[-1]
+        return scaler.mean, scaler.std, lrm.coefficients, lrm.intercept
+
+    lr = baseline_regressors()["LinearRegression"]
+    stages = [*feature_stages(), lr]
+    scaler = stages[4]
+    for grid, shared in (
+        (ParamGridBuilder().addGrid(lr.regParam, [0.01, 0.5]).build(), True),
+        (ParamGridBuilder().addGrid(scaler.withMean, [False, True]).build(), False),
+    ):
+        ours = fit_all(Pipeline(stages=stages), grid)
+        stock = fit_all(_stock_pipeline(stages), grid)
+        assert [summary(ours[i]) for i in range(2)] == [
+            summary(stock[i]) for i in range(2)
+        ]
+        assert (ours[0].stages[0] is ours[1].stages[0]) is shared

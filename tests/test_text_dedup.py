@@ -1,6 +1,7 @@
 """Text operators + the dedup ladder: planted-duplicate recall and
 semantic pins that the oracle queries rely on."""
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -11,6 +12,18 @@ from steel_energy_consumption_prediction_using_pyspark_spark.operators import (
     text as X,
 )
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import T
+
+LARGE_VAR_TYPES = "spark.sql.execution.arrow.useLargeVarTypes"
+
+
+@pytest.fixture(params=["false", "true"], ids=["arrow_string", "arrow_large_string"])
+def arrow_var_types(request, spark):
+    """Runs a kernel parity pin with Arrow's 32-bit and 64-bit string
+    offsets: the kernels must read offsets at the declared width."""
+    old = spark.conf.get(LARGE_VAR_TYPES)
+    spark.conf.set(LARGE_VAR_TYPES, request.param)
+    yield request.param
+    spark.conf.set(LARGE_VAR_TYPES, old)
 
 
 def test_split_keeps_trailing_empty(spark):
@@ -79,7 +92,7 @@ def test_exact_dedup_removes_planted(spark, sf_dir):
     assert kept.filter(F.col("doc_id") >= 10_000_000).count() == 0
 
 
-def test_minhash_banding_kernel_matches_expression(spark, sf_dir):
+def test_minhash_banding_kernel_matches_expression(spark, sf_dir, arrow_var_types):
     """The Arrow numpy banding kernel (round 9) must reproduce the
     minhash_signature EXPRESSION's banded triples exactly: same affine
     params, same int64 (a·h+b) mod M61 arithmetic, same comma-joined
@@ -116,7 +129,7 @@ def test_minhash_lsh_finds_planted(spark, sf_dir):
     assert expected <= found  # exact clones MUST be found (jaccard 1.0)
 
 
-def test_shingle_kernel_matches_expression(spark, sf_dir):
+def test_shingle_kernel_matches_expression(spark, sf_dir, arrow_var_types):
     """The Arrow shingle-set kernel (round 10, shingled_sets /
     _hashed_shingle_sets hot path) must reproduce the interpreted HOF
     chain element for element IN ORDER: same grams (concat_ws-joined
@@ -278,7 +291,7 @@ def test_winnowing_guarantee(spark):
     assert all(len(fp) == 32 for fp in out[1])  # md5 hex
 
 
-def test_winnow_kernel_matches_expression(spark, sf_dir):
+def test_winnow_kernel_matches_expression(spark, sf_dir, arrow_var_types):
     """The Arrow winnowing kernel (round 10) must reproduce the
     interpreted HOF chain — transform(shingles_from, md5) →
     winnow_windows (array_min over w-slices + array_distinct) —
