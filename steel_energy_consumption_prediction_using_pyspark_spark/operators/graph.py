@@ -84,11 +84,13 @@ def pagerank(
     cap. Costs one scalar aggregation action per iteration (which
     also serves as the eager lineage barrier), so leave it None for
     short oracle-checked fixed-iteration walks and set it for
-    convergence runs (tol≈1e-6/N for rank-stable top-k). Long walks
-    additionally `localCheckpoint` the rank vector every
-    `checkpoint_every` iterations: without truncation a 50-iteration
-    lineage accumulates 50 join subtrees, bloating planning time and
-    the cost of any executor retry."""
+    convergence runs (tol≈1e-6/N for rank-stable top-k).
+
+    `checkpoint_every`: with or without `tol`, a walk longer than this
+    `localCheckpoint`s the rank vector every `checkpoint_every`
+    iterations (never on the last one): without truncation a
+    60-iteration walk plans one 60-join-deep tree, bloating planning
+    time and the cost of any executor retry."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     if every_node_emits:
@@ -144,6 +146,7 @@ def pagerank(
         )
         if persist:
             new_ranks = new_ranks.persist(StorageLevel.MEMORY_AND_DISK)
+        delta = None
         if tol is not None:
             # L1 convergence check — a |V|⋈|V| equi-join reduced to one
             # scalar; the action doubles as the eager lineage barrier.
@@ -155,30 +158,27 @@ def pagerank(
                 .agg(F.sum(F.abs(F.col("rank") - F.col("_prev"))))
                 .first()[0]
             )
+        elif persist and eager:
+            new_ranks.count()  # cut lineage, then drop the old vector
+        if it % checkpoint_every == 0 and it < iterations:
+            # Truncate the accumulated iteration lineage on both paths;
+            # the checkpointed rows replace the persisted vector.
+            cut = new_ranks.localCheckpoint(eager=True)
             if persist:
-                ranks.unpersist(blocking=False)
-            if it % checkpoint_every == 0:
-                # Truncate the accumulated iteration lineage; the
-                # checkpointed RDD replaces the persist entry.
-                new_ranks = new_ranks.localCheckpoint(eager=True)
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-            continue
+                new_ranks.unpersist(blocking=False)
+            new_ranks = cut
         if persist:
-            if eager:
-                new_ranks.count()  # cut lineage, then drop the old vector
-                ranks.unpersist()
-            else:
-                # Non-eager: the superseded vector was never materialized
-                # (no action yet), so a lazy unpersist just cancels its
-                # cache intent — each intermediate level is consumed
-                # exactly once by the next level within the single final
-                # action, so caching it buys nothing and at 30+
-                # iterations the accumulated MEMORY_AND_DISK entries are
-                # a real executor-memory leak (VERDICT r1 #4).
-                ranks.unpersist(blocking=False)
+            # Without an action since the last level (non-eager, no tol)
+            # the superseded vector was never materialized, so a lazy
+            # unpersist just cancels its cache intent — each level is
+            # consumed exactly once by the next within the single final
+            # action, and at 30+ iterations the accumulated
+            # MEMORY_AND_DISK entries are a real executor-memory leak
+            # (VERDICT r1 #4).
+            ranks.unpersist(blocking=False)
         ranks = new_ranks
+        if delta is not None and delta < tol:
+            break
     return ranks
 
 

@@ -39,8 +39,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from steel_energy_consumption_prediction_using_pyspark_spark.operators.similarity import (
-    _py_dot,
+from steel_energy_consumption_prediction_using_pyspark_spark.operators.arrow import (
+    build_list,
+    fixed_width_f64,
+    seq_dot,
 )
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
     KMEANS_HASH_A,
@@ -77,40 +79,39 @@ def _lloyd_int_np(Xi, k: int, iters: int) -> list[list[float]]:
     jobs AND to the DuckDB twin:
 
     - init: the first k rows (= the k lowest-id training codes);
-    - assignment: argmax(dot(sub, c) − ½|c|²), the dot folded LEFT TO
-      RIGHT over vectorized sequential adds — the same association as
-      aggregate(zip_with(...)) and list_dot_product, so every double
-      matches; np.argmax takes the first maximum = ties to the lowest
-      cid, exactly the engine's struct-min;
+    - assignment: :func:`_nearest_code`;
     - update: exact int64 element sums / count via Python true
       division (order-independent integers; the identical correctly-
       rounded IEEE divide every engine performs);
     - empty clusters keep their previous centroid.
 
-    Float64 +,*,/ are IEEE-defined identically in numpy, the JVM and
-    DuckDB, so driver-side training changes WHERE the arithmetic runs,
-    not a single bit of its result (golden-checked against the former
+    Driver-side training changes WHERE the arithmetic runs, not a
+    single bit of its result (golden-checked against the former
     distributed loop at sf0.1 before the swap)."""
     import numpy as np
 
     X = Xi.astype(np.float64)
-    n, subdim = Xi.shape
+    subdim = Xi.shape[1]
     books = [[float(x) for x in Xi[j]] for j in range(k)]
     for _ in range(iters):
-        scores = np.empty((n, k))
-        for j in range(k):
-            cv = books[j]
-            acc = np.zeros(n)
-            for i in range(subdim):
-                acc = acc + X[:, i] * cv[i]
-            scores[:, j] = acc - 0.5 * _py_dot(cv, cv)
-        assign = np.argmax(scores, axis=1)
+        assign = _nearest_code(X, books)
         for j in range(k):
             members = Xi[assign == j]
             if len(members):
                 s = members.sum(axis=0, dtype=np.int64)
                 books[j] = [int(s[i]) / len(members) for i in range(subdim)]
     return books
+
+
+def _nearest_code(X, book):
+    """Row-wise argmin L2²(x, c) over the codewords, computed as
+    argmax(dot(x, c) − ½|c|²) (|x|² is constant per row, so the
+    identity is exact), ties to the lowest cid: np.argmax's first
+    maximum = the engine's struct-min."""
+    import numpy as np
+
+    C = np.asarray(book, dtype=np.float64)
+    return np.argmax(seq_dot(X[:, None], C) - 0.5 * seq_dot(C, C), axis=1)
 
 
 def pq_train(
@@ -186,12 +187,10 @@ def pq_encode(
     evaluates O(m·k·subdim) interpreted lambdas per row and re-analyzes
     a ~256-subtree plan per action (measured 0.9 s build + 1.3-3.4 s
     exec at sf0.1; the kernel is 0.1 s + 0.45 s with IDENTICAL codes).
-    Arithmetic is bit-identical to the HOF fold and the DuckDB twin —
-    the similarity._assign_lists_arrow doctrine: left-to-right dot
-    folds, -(dot − ½|c|²) minimized with numpy's first-minimum = the
-    struct-min's tie-to-lowest-cid; the int codes themselves are still
-    computed JVM-side by the identical round(x/scale·127) expression."""
-    m, subdim, k = model.m, model.subdim, model.k
+    Each code is :func:`_nearest_code`'s, bit-identical to the HOF fold
+    and the DuckDB twin; the int codes themselves are still computed
+    JVM-side by the identical round(x/scale·127) expression."""
+    m, subdim, books = model.m, model.subdim, model.codebooks
 
     from pyspark.sql.types import (
         IntegerType,
@@ -200,11 +199,6 @@ def pq_encode(
         StructType,
     )
 
-    books = [
-        [[float(x) for x in cw] for cw in model.codebooks[s]]
-        for s in range(m)
-    ]
-    halves = [[0.5 * _py_dot(cw, cw) for cw in books[s]] for s in range(m)]
     v = F.col(vec_col).cast("array<double>")
     src = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -218,31 +212,20 @@ def pq_encode(
     )
 
     def _encode(batches):
-        import numpy as np
         import pyarrow as pa
 
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            from steel_energy_consumption_prediction_using_pyspark_spark.operators.similarity import (
-                _fixed_width_f64,
-            )
-
-            X = _fixed_width_f64(b.column("_q"), m * subdim)
-            cols = [b.column("neighbor_id")]
-            for s in range(m):
-                sub = X[:, s * subdim : (s + 1) * subdim]
-                neg = np.empty((n, k))
-                for j in range(k):
-                    cw = books[s][j]
-                    a = np.zeros(n)
-                    for i in range(subdim):
-                        a = a + sub[:, i] * cw[i]
-                    neg[:, j] = -(a - halves[s][j])
-                cols.append(
-                    pa.array(np.argmin(neg, axis=1).astype(np.int32))
+            X = fixed_width_f64(b.column("_q"), m * subdim)
+            cols = [b.column("neighbor_id")] + [
+                pa.array(
+                    _nearest_code(X[:, s * subdim : (s + 1) * subdim], book),
+                    pa.int32(),
                 )
+                for s, book in enumerate(books)
+            ]
             yield pa.RecordBatch.from_arrays(
                 cols, ["neighbor_id"] + [f"c{s}" for s in range(m)]
             )
@@ -282,11 +265,11 @@ def pq_adc_topk(
     # aggregate(zip_with(...)) folds over literal codeword arrays,
     # ~256 subtrees — cost ~0.7-1.5 s of DRIVER plan analysis per
     # action even after the round-9 single-select collapse; the kernel
-    # is one opaque node. Arithmetic is bit-identical: each lut entry
-    # is the same left-to-right sequential dot fold over the same
-    # float64 codeword values (vectorized across query rows), so every
-    # double matches the HOF fold and the DuckDB twin.
-    books_np = model.codebooks  # [m][k][subdim] plain floats
+    # is one opaque node. Each lut entry is an ``arrow.seq_dot`` fold,
+    # so every double matches the HOF fold and the DuckDB twin.
+    import numpy as np
+
+    books = [np.asarray(book, dtype=np.float64) for book in model.codebooks]
 
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
@@ -299,30 +282,16 @@ def pq_adc_topk(
         import numpy as np
         import pyarrow as pa
 
-        from steel_energy_consumption_prediction_using_pyspark_spark.operators.similarity import (
-            _fixed_width_f64,
-        )
-
         for b in batches:
             n = b.num_rows
             if n == 0:
                 continue
-            V = _fixed_width_f64(b.column("_v"), m * subdim)
+            V = fixed_width_f64(b.column("_v"), m * subdim)
+            row_of = np.repeat(np.arange(n), kcw)
             cols = [b.column("query_id")]
-            offs = pa.array(
-                np.arange(0, kcw * (n + 1), kcw, dtype=np.int32), pa.int32()
-            )
-            for s in range(m):
-                sub = V[:, s * subdim : (s + 1) * subdim]
-                lut = np.empty((n, kcw))
-                for j, cv in enumerate(books_np[s]):
-                    acc = np.zeros(n)
-                    for i in range(subdim):
-                        acc = acc + sub[:, i] * cv[i]
-                    lut[:, j] = acc
-                cols.append(
-                    pa.ListArray.from_arrays(offs, pa.array(lut.ravel()))
-                )
+            for s, book in enumerate(books):
+                lut = seq_dot(V[:, None, s * subdim : (s + 1) * subdim], book)
+                cols.append(build_list(row_of, pa.array(lut.ravel()), n))
             yield pa.RecordBatch.from_arrays(
                 cols, ["query_id"] + [f"_lut{s}" for s in range(m)]
             )

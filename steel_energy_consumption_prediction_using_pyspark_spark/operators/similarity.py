@@ -24,6 +24,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from steel_energy_consumption_prediction_using_pyspark_spark.operators.arrow import (
+    fixed_width_f64,
+    seq_dot,
+)
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
     KMEANS_HASH_A,
     KMEANS_HASH_M,
@@ -265,15 +269,6 @@ class IvfIndex:
         self.assigned.unpersist()
 
 
-def _py_dot(a: list[float], b: list[float]) -> float:
-    """Driver-side dot with the IDENTICAL left-to-right fold as
-    util.dot / DuckDB list_dot_product — bit-for-bit the same double."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
-
-
 def _fmt_double_lit(x: float) -> str:
     """Shortest round-trip decimal for a double, as a Spark SQL literal.
     Python's repr emits the shortest string that re-parses to the same
@@ -314,42 +309,23 @@ def kmeans_cosine_det(
     The training set is BOUNDED by construction (ivf_build caps it at
     max(100k, KMEANS_MAX_TRAIN) rows — bounded metadata, not data), so
     since round 5 the codes are collected ONCE and Lloyd runs
-    driver-side in numpy with bit-identical arithmetic: the cosine's
-    dot products fold LEFT TO RIGHT via vectorized sequential adds
-    (the aggregate(zip_with)/list_dot_product association), norms are
-    IEEE sqrt with the 0→1 guard, np.argmax's first-maximum IS the
-    struct-min tie-to-lowest-cid, and centroid updates are exact int64
-    element sums / count in Python true division. Float64 +,*,/,sqrt
-    are IEEE-identical in numpy, the JVM and DuckDB, so moving WHERE
-    the arithmetic runs changes no bit of the result (golden-checked
-    against the former per-iteration Spark jobs at sf0.1). The former
-    loop paid ~1 s/iteration planning the k×dim literal expression
-    tree against ≤2000 rows of actual data."""
-    import math
-
+    driver-side in numpy with bit-identical arithmetic: the cosine is
+    :func:`_nearest_cosine` (dots folded by ``arrow.seq_dot``), and
+    centroid updates are exact int64 element sums / count in Python
+    true division, so moving WHERE the arithmetic runs changes no bit
+    of the result (golden-checked against the former per-iteration
+    Spark jobs at sf0.1). The former loop paid ~1 s/iteration planning
+    the k×dim literal expression tree against ≤2000 rows of actual
+    data."""
     import numpy as np
 
     rows = train.select(F.col(id_col).alias("_tid"), F.col(code_col).alias("_q")).collect()
     rows.sort(key=lambda r: r._tid)
     Qi = np.array([r._q for r in rows], dtype=np.int64)
     X = Qi.astype(np.float64)
-    n = len(Qi)
-    acc = np.zeros(n)
-    for i in range(dim):
-        acc = acc + X[:, i] * X[:, i]
-    nq = np.sqrt(acc)
-    nq[nq == 0.0] = 1.0  # the guarded-norm 0 -> 1 rule (oracle: CASE WHEN nrm = 0 THEN 1.0)
     cents = [[float(v) for v in Qi[j]] for j in range(k)]
     for _ in range(iters):
-        scores = np.empty((n, k))
-        for j in range(k):
-            cv = cents[j]
-            ncent = math.sqrt(_py_dot(cv, cv)) or 1.0
-            a = np.zeros(n)
-            for i in range(dim):
-                a = a + X[:, i] * cv[i]
-            scores[:, j] = a / (nq * ncent)
-        assign = np.argmax(scores, axis=1)
+        assign = _nearest_cosine(X, cents)
         for j in range(k):
             members = Qi[assign == j]
             if len(members):
@@ -358,33 +334,19 @@ def kmeans_cosine_det(
     return cents
 
 
-def _fixed_width_f64(arr, dim: int):
-    """Zero-copy-ish (n, dim) float64 matrix from an Arrow list array of
-    fixed-width vectors: slice the .values buffer by .offsets instead of
-    to_pylist() (round 10, judge advice r9 — the per-element Python
-    conversion was O(rows·dim) object churn inside the hot kernel, and
-    .values/.offsets stay aligned even for null/sliced arrays). Nulls or
-    ragged widths raise a clear error — embedding vectors are
-    fixed-width non-null by fixture contract, and a silent NaN fill
-    could change assignments."""
+def _nearest_cosine(X, cents):
+    """Row-wise argmax cosine(x, c) over the centroids, ties to the
+    lowest cid (np.argmax's first maximum = the struct-min tie rule).
+    Both norms take the guarded 0 -> 1 rule (oracle: CASE WHEN nrm = 0
+    THEN 1.0)."""
     import numpy as np
 
-    if hasattr(arr, "combine_chunks"):
-        arr = arr.combine_chunks()
-    if arr.null_count:
-        raise ValueError("null vector in fixed-width Arrow kernel input")
-    offs = np.asarray(arr.offsets, dtype=np.int64)
-    widths = offs[1:] - offs[:-1]
-    if widths.size and not (widths == dim).all():
-        raise ValueError(
-            f"ragged vector widths in Arrow kernel input (expected {dim})"
-        )
-    vals = arr.values
-    if vals.null_count:
-        raise ValueError("null vector element in Arrow kernel input")
-    n = len(arr)
-    flat = np.asarray(vals)[offs[0] : offs[0] + n * dim]
-    return flat.astype(np.float64, copy=False).reshape(n, dim)
+    C = np.asarray(cents, dtype=np.float64)
+    nx = np.sqrt(seq_dot(X, X))
+    nc = np.sqrt(seq_dot(C, C))
+    nx[nx == 0.0] = 1.0
+    nc[nc == 0.0] = 1.0
+    return np.argmax(seq_dot(X[:, None], C) / (nx[:, None] * nc), axis=1)
 
 
 def _assign_lists_arrow(
@@ -400,19 +362,11 @@ def _assign_lists_arrow(
     lambda evaluations per row plus a giant-tree analysis/codegen pass
     per action (measured at k=32, dim=64: ~1 s build + 1.3-4.4 s exec
     per action at sf0.1; the Arrow kernel is 0.1 s + 0.65 s with
-    IDENTICAL assignments). numpy's vectorized sequential adds keep
-    the arithmetic bit-identical to the HOF fold and the DuckDB twin:
-    the dot folds LEFT TO RIGHT over dims (acc = acc + X[:,i]·c[i] —
-    the same association as aggregate(zip_with)), norms are IEEE sqrt
-    with the 0→1 guard on BOTH factors, scores are -(dot/(nv·nc))
-    minimized with numpy's first-minimum = the struct-min's
-    tie-to-lowest-cid. Float64 +,*,/,sqrt are IEEE-identical in
-    numpy, the JVM and DuckDB, so moving WHERE the arithmetic runs
-    changes no bit (the kmeans_cosine_det doctrine, applied to the
-    corpus-assignment projection). Still map-only: one Arrow pass
-    riding the corpus scan, no shuffle at any scale."""
-    import math
-
+    IDENTICAL assignments). The scores are :func:`_nearest_cosine`'s,
+    bit-identical to the HOF fold and the DuckDB twin (the
+    kmeans_cosine_det doctrine, applied to the corpus-assignment
+    projection). Still map-only: one Arrow pass riding the corpus scan,
+    no shuffle at any scale."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -423,10 +377,6 @@ def _assign_lists_arrow(
     )
 
     cents = [[float(x) for x in cv] for cv in centroids]
-    k = len(cents)
-    ncs = []
-    for cv in cents:
-        ncs.append(math.sqrt(_py_dot(cv, cv)) or 1.0)
     schema = StructType(
         [
             StructField("neighbor_id", LongType()),
@@ -436,7 +386,6 @@ def _assign_lists_arrow(
     )
 
     def _assign(batches):
-        import numpy as np
         import pyarrow as pa
 
         for b in batches:
@@ -444,20 +393,7 @@ def _assign_lists_arrow(
             if n == 0:
                 continue
             cvs = b.column("_cv")
-            X = _fixed_width_f64(cvs, dim)
-            acc = np.zeros(n)
-            for i in range(dim):
-                acc = acc + X[:, i] * X[:, i]
-            nv = np.sqrt(acc)
-            nv[nv == 0.0] = 1.0  # the guarded-norm 0 -> 1 rule (oracle: CASE WHEN nrm = 0 THEN 1.0)
-            neg = np.empty((n, k))
-            for j in range(k):
-                cv = cents[j]
-                a = np.zeros(n)
-                for i in range(dim):
-                    a = a + X[:, i] * cv[i]
-                neg[:, j] = -(a / (nv * ncs[j]))
-            lists = np.argmin(neg, axis=1).astype(np.int32)
+            lists = _nearest_cosine(fixed_width_f64(cvs, dim), cents)
             yield pa.RecordBatch.from_arrays(
                 [b.column("neighbor_id"), cvs, pa.array(lists, pa.int32())],
                 ["neighbor_id", "_cv", "_list"],

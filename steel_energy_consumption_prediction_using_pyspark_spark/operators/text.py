@@ -17,6 +17,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from steel_energy_consumption_prediction_using_pyspark_spark.operators.arrow import (
+    build_list,
+    gram_windows,
+    join_grams,
+    list_parts,
+    md5_digests,
+)
+
 # Whitespace tokenizer: matches both Java regex (Spark) and RE2
 # (DuckDB oracle) semantics for this pattern.
 TOKEN_SEP = " "
@@ -182,26 +190,6 @@ def shingles_from(toks: Column | str, n: int = 3) -> Column:
     )
 
 
-def arrow_string_buffers(arr):
-    """(offsets, data) of a flat pyarrow ``string`` or ``large_string``
-    array for zero-copy slicing: the offsets are read at the width the
-    type declares (int32 / int64) and cut to the array's slice, and a
-    None data buffer (every value empty) reads as empty bytes. Any
-    other layout raises instead of hashing misread bytes."""
-    import numpy as np
-    import pyarrow as pa
-
-    if pa.types.is_string(arr.type):
-        width = np.int32
-    elif pa.types.is_large_string(arr.type):
-        width = np.int64
-    else:
-        raise TypeError(f"expected a string or large_string array, got {arr.type}")
-    _, offs, data = arr.buffers()
-    offs = np.frombuffer(offs, dtype=width)[arr.offset : arr.offset + len(arr) + 1]
-    return offs, memoryview(data if data is not None else b"")
-
-
 def pos_grams_arrow(
     staged: DataFrame, n: int, keep: list[str]
 ) -> DataFrame:
@@ -230,38 +218,23 @@ def pos_grams_arrow(
     def _kern(batches):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for b in batches:
             nrows = b.num_rows
             if nrows == 0:
                 continue
-            tk = b.column("_tk")
-            if hasattr(tk, "combine_chunks"):
-                tk = tk.combine_chunks()
-            offs = np.asarray(tk.offsets, dtype=np.int64)
-            valid = np.asarray(
-                tk.is_valid().to_numpy(zero_copy_only=False), dtype=bool
-            )
+            offs, valid, vals = list_parts(b.column("_tk"))
             sizes = offs[1:] - offs[:-1]
             counts = np.where(valid, np.maximum(sizes - (n - 1), 0), 0)
-            total = int(counts.sum())
-            if total == 0:
+            if not counts.any():
                 continue
-            vals = tk.values
-            M = int(offs[-1]) - (n - 1)
-            joined = pc.binary_join_element_wise(
-                *[vals.slice(j, M) for j in range(n)], pa.scalar(" ", vals.type)
-            )
-            cum = np.cumsum(counts) - counts
-            local = np.arange(total, dtype=np.int64) - np.repeat(cum, counts)
-            idx = np.repeat(offs[:-1], counts) + local
-            row_of = pa.array(np.repeat(np.arange(nrows), counts))
+            idx, row_of = gram_windows(offs, counts)
+            rows = pa.array(row_of)
             yield pa.RecordBatch.from_arrays(
-                [b.column(c).take(row_of) for c in keep]
+                [b.column(c).take(rows) for c in keep]
                 + [
-                    pa.array(local.astype(np.int32), pa.int32()),
-                    joined.take(pa.array(idx)),
+                    pa.array((idx - offs[row_of]).astype(np.int32), pa.int32()),
+                    join_grams(vals, int(offs[-1]), n).take(pa.array(idx)),
                 ],
                 keep + ["p", "gram"],
             )
@@ -304,11 +277,9 @@ def _winnow_arrow(
     md5).
 
     Exactness, stage by stage:
-    - grams: Arrow binary_join_element_wise over k shifted slices of
-      the flat token values buffer — byte-identical to concat_ws(' ',
-      element_at...), row boundaries re-imposed from the list offsets
+    - grams: ``arrow.join_grams`` windowed by ``arrow.gram_windows``
       (same recipe as dedup._shingle_arrow).
-    - md5: hashlib produces the identical 16-byte digest the JVM md5()
+    - md5: ``arrow.md5_digests`` is the 16-byte digest the JVM md5()
       hex-encodes; the kernel compares digests as big-endian (hi, lo)
       uint64 pairs — lowercase-hex string order IS digest byte order
       (hex encoding is monotone), so numeric (hi, lo) minima equal
@@ -338,64 +309,24 @@ def _winnow_arrow(
 
     def _kern(batches):
         import binascii
-        from hashlib import md5
 
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for b in batches:
             nrows = b.num_rows
             if nrows == 0:
                 continue
-            tk = b.column("_tk")
-            if hasattr(tk, "combine_chunks"):
-                tk = tk.combine_chunks()
-            offs = np.asarray(tk.offsets, dtype=np.int64)
-            valid = np.asarray(
-                tk.is_valid().to_numpy(zero_copy_only=False), dtype=bool
-            )
+            offs, valid, vals = list_parts(b.column("_tk"))
             sizes = offs[1:] - offs[:-1]
             g = np.where(valid, np.maximum(sizes - (k - 1), 0), 0)
-            wc = np.maximum(g - (w - 1), 0)
-            total = int(wc.sum())
-            if total == 0:
-                empty_offs = pa.array(
-                    np.zeros(nrows + 1, dtype=np.int32), pa.int32()
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [b.column(c) for c in keep]
-                    + [
-                        pa.ListArray.from_arrays(
-                            empty_offs, pa.array([], pa.string())
-                        )
-                    ],
-                    keep + [out_col],
-                )
-                continue
-            vals = tk.values
-            M = int(offs[-1]) - (k - 1)
-            joined = pc.binary_join_element_wise(
-                *[vals.slice(j, M) for j in range(k)], pa.scalar(" ", vals.type)
-            )
-            goffs, mv = arrow_string_buffers(joined)
-            raw = np.frombuffer(
-                b"".join(
-                    md5(mv[goffs[i] : goffs[i + 1]]).digest()
-                    for i in range(len(joined))
-                ),
-                dtype=np.uint8,
-            ).reshape(-1, 16)
+            # Window t of row i covers grams offs[i]+t .. offs[i]+t+w-1,
+            # all inside row i's gram range (t+w-1 < g_i).
+            idx, row_of = gram_windows(offs, np.maximum(g - (w - 1), 0))
+            raw = md5_digests(join_grams(vals, int(offs[-1]), k))
             dig = raw.view(">u8")
             hi = dig[:, 0].astype(np.uint64)
             lo = dig[:, 1].astype(np.uint64)
-            # Absolute joined-index of each window's first gram: window
-            # t of row i covers grams offs[i]+t .. offs[i]+t+w-1, all
-            # inside row i's gram range by construction (t+w-1 < g_i).
-            cum = np.cumsum(wc) - wc
-            idx = np.repeat(offs[:-1], wc) + (
-                np.arange(total, dtype=np.int64) - np.repeat(cum, wc)
-            )
             wh = hi[idx].copy()
             wl = lo[idx].copy()
             wpos = idx.copy()
@@ -406,14 +337,12 @@ def _winnow_arrow(
                 wh[lt] = ch[lt]
                 wl[lt] = cl[lt]
                 wpos[lt] = idx[lt] + j
-            row_of = np.repeat(np.arange(nrows, dtype=np.int64), wc)
             # First-occurrence distinct per (row, digest): group by
             # sorted (row, hi, lo), keep the MIN original window index
             # of each group, then restore window order.
             order = np.lexsort((wl, wh, row_of))
             rs, hs_, ls_ = row_of[order], wh[order], wl[order]
-            new_grp = np.empty(total, dtype=bool)
-            new_grp[0] = True
+            new_grp = np.ones(len(order), dtype=bool)
             new_grp[1:] = (
                 (rs[1:] != rs[:-1])
                 | (hs_[1:] != hs_[:-1])
@@ -432,16 +361,9 @@ def _winnow_arrow(
                 m,
                 [None, pa.py_buffer(soffs.tobytes()), pa.py_buffer(hexdata)],
             )
-            cnt = np.bincount(out_rows, minlength=nrows)
-            new_offs = np.zeros(nrows + 1, dtype=np.int32)
-            np.cumsum(cnt, out=new_offs[1:])
             yield pa.RecordBatch.from_arrays(
                 [b.column(c) for c in keep]
-                + [
-                    pa.ListArray.from_arrays(
-                        pa.array(new_offs, pa.int32()), out_vals
-                    )
-                ],
+                + [build_list(out_rows, out_vals, nrows)],
                 keep + [out_col],
             )
 

@@ -22,6 +22,10 @@ from steel_energy_consumption_prediction_using_pyspark_spark.operators import (
 from steel_energy_consumption_prediction_using_pyspark_spark.operators import (
     text as X,
 )
+from steel_energy_consumption_prediction_using_pyspark_spark.operators.arrow import (
+    gram_windows,
+    list_parts,
+)
 from steel_energy_consumption_prediction_using_pyspark_spark.sources.readers import (
     read_parquet,
 )
@@ -676,41 +680,22 @@ def q_skipgram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             nrows = b.num_rows
             if nrows == 0:
                 continue
-            tk = b.column("_tk")
-            if hasattr(tk, "combine_chunks"):
-                tk = tk.combine_chunks()
-            offs = np.asarray(tk.offsets, dtype=np.int64)
-            valid = np.asarray(
-                tk.is_valid().to_numpy(zero_copy_only=False), dtype=bool
-            )
+            offs, valid, vals = list_parts(b.column("_tk"))
             sizes = offs[1:] - offs[:-1]
-            vals = tk.values
             out_a, out_b = [], []
             for o in (1, 2):
-                cnt = np.where(valid, np.maximum(sizes - o, 0), 0)
-                tot = int(cnt.sum())
-                if tot == 0:
-                    continue
-                cum = np.cumsum(cnt) - cnt
-                idx = np.repeat(offs[:-1], cnt) + (
-                    np.arange(tot, dtype=np.int64) - np.repeat(cum, cnt)
+                idx, _ = gram_windows(
+                    offs, np.where(valid, np.maximum(sizes - o, 0), 0)
                 )
                 a = vals.take(pa.array(idx))
                 bb = vals.take(pa.array(idx + o))
                 out_a += [a, bb]
                 out_b += [bb, a]
-            if not out_a:
-                continue
-            cc = lambda x: (  # noqa: E731
-                x.combine_chunks() if hasattr(x, "combine_chunks") else x
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.concat_arrays([cc(x) for x in out_a]),
-                    pa.concat_arrays([cc(x) for x in out_b]),
-                ],
-                ["wa", "wb"],
-            )
+            wa = pa.concat_arrays(out_a)
+            if len(wa):
+                yield pa.RecordBatch.from_arrays(
+                    [wa, pa.concat_arrays(out_b)], ["wa", "wb"]
+                )
 
     return (
         d.mapInArrow(_pairs, schema)
@@ -799,18 +784,11 @@ def _content_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             nrows = b.num_rows
             if nrows == 0:
                 continue
-            tk = b.column("_tk")
-            if hasattr(tk, "combine_chunks"):
-                tk = tk.combine_chunks()
-            offs = np.asarray(tk.offsets, dtype=np.int64)
-            valid = np.asarray(
-                tk.is_valid().to_numpy(zero_copy_only=False), dtype=bool
-            )
-            limit = int(offs[-1])
-            if limit == 0:
-                continue
+            offs, valid, vals = list_parts(b.column("_tk"))
+            sizes = offs[1:] - offs[:-1]
+            pos, row_of = gram_windows(offs, np.where(valid, sizes, 0))
             cleaned = pc.replace_substring_regex(
-                tk.values.slice(0, limit), pattern="[^a-z]", replacement=""
+                vals.take(pa.array(pos)), pattern="[^a-z]", replacement=""
             )
             keep = np.asarray(
                 pc.greater_equal(pc.binary_length(cleaned), 5).to_numpy(
@@ -818,55 +796,26 @@ def _content_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 dtype=bool,
             )
-            # Dense [0, limit) row/validity maps — offsets are absolute
-            # into .values, so positions before offs[0] (sliced input)
-            # are padded out and never kept.
-            sizes = offs[1:] - offs[:-1]
-            row_of_tok = np.zeros(limit, dtype=np.int64)
-            row_of_tok[offs[0] :] = np.repeat(
-                np.arange(nrows, dtype=np.int64), sizes
-            )
-            tok_ok = np.zeros(limit, dtype=bool)
-            tok_ok[offs[0] :] = np.repeat(valid, sizes)
-            keep &= tok_ok
-            kept_pos = np.nonzero(keep)[0]
-            if kept_pos.size == 0:
-                continue
-            W = cleaned.take(pa.array(kept_pos))
-            wrow = row_of_tok[kept_pos]
-            wcnt = np.bincount(wrow, minlength=nrows)
-            wcnt = np.where(wcnt >= 3, wcnt, 0)  # docs filter size(w)>=3
+            W = cleaned.filter(pa.array(keep))
+            wcnt = np.bincount(row_of[keep], minlength=nrows)
             woffs = np.zeros(nrows + 1, dtype=np.int64)
-            np.cumsum(np.bincount(wrow, minlength=nrows), out=woffs[1:])
+            np.cumsum(wcnt, out=woffs[1:])
+            wcnt = np.where(wcnt >= 3, wcnt, 0)  # docs filter size(w)>=3
             out_a, out_b = [], []
             for k in (1, 2):
-                cnt_k = np.maximum(wcnt - k, 0)
-                tot = int(cnt_k.sum())
-                if tot == 0:
-                    continue
-                cum = np.cumsum(cnt_k) - cnt_k
-                idx = np.repeat(woffs[:-1], cnt_k) + (
-                    np.arange(tot, dtype=np.int64) - np.repeat(cum, cnt_k)
-                )
+                idx, _ = gram_windows(woffs, np.maximum(wcnt - k, 0))
                 a = W.take(pa.array(idx))
                 bb = W.take(pa.array(idx + k))
                 le = pc.less_equal(a, bb)
                 out_a.append(pc.if_else(le, a, bb))
                 out_b.append(pc.if_else(le, bb, a))
-            if not out_a:
-                continue
-            src = pa.concat_arrays(
-                [x.combine_chunks() if hasattr(x, "combine_chunks") else x
-                 for x in out_a]
-            )
-            dst = pa.concat_arrays(
-                [x.combine_chunks() if hasattr(x, "combine_chunks") else x
-                 for x in out_b]
-            )
-            ne = pc.not_equal(src, dst)
-            yield pa.RecordBatch.from_arrays(
-                [src.filter(ne), dst.filter(ne)], ["src", "dst"]
-            )
+            src = pa.concat_arrays(out_a)
+            dst = pa.concat_arrays(out_b)
+            if len(src):
+                ne = pc.not_equal(src, dst)
+                yield pa.RecordBatch.from_arrays(
+                    [src.filter(ne), dst.filter(ne)], ["src", "dst"]
+                )
 
     return (
         d.mapInArrow(_pairs, schema)

@@ -122,31 +122,131 @@ def test_gram_hash32_matches_hashlib(spark):
 
 
 def test_gram_hash32_kernel_offset_widths():
-    """The kernel-side gram hash reads string offsets at the declared
-    width (string: int32, large_string: int64), from a sliced array,
-    hashes an all-empty array as md5 of empty bytes, and refuses any
-    other layout instead of hashing misread bytes."""
+    """The Arrow-kernel substrate (operators/arrow.py) on every layout a
+    kernel can meet — sliced, null slot, chunked, large_list /
+    large_string, empty: list and string offsets are read at the
+    declared width from the array's slice, lists rebuild, vectors
+    reshape, the gram hash is md5's first 4 bytes, seq_dot is the
+    left-to-right Python fold bit for bit, and ragged or null vectors
+    and non-string layouts raise instead of yielding misread values."""
     import hashlib
+    import random
 
     import numpy as np
     import pyarrow as pa
     import pytest
 
+    from steel_energy_consumption_prediction_using_pyspark_spark.operators.arrow import (
+        build_list,
+        fixed_width_f64,
+        gram_windows,
+        list_parts,
+        md5_digests,
+        seq_dot,
+        string_parts,
+    )
     from steel_energy_consumption_prediction_using_pyspark_spark.operators.dedup import (
         _gram_hash32_np,
     )
 
-    def want(gs):
-        return [int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in gs]
+    def lists(rows, large=False):
+        return pa.array(
+            rows,
+            pa.large_list(pa.large_string()) if large else pa.list_(pa.string()),
+        )
 
+    rows = [["héllo", "wörld"], None, [], ["a b c", "", "x"]]
+    cases = {
+        "plain": lists(rows),
+        "sliced": lists([["skip", "me"]] + rows).slice(1),
+        "null slot": lists([None] + rows),
+        "chunked": pa.chunked_array([lists(rows[:2]), lists(rows[2:])]),
+        "large": lists(rows, large=True).slice(1),
+        "null slot with a range": pa.ListArray.from_arrays(
+            pa.array([0, 2, 4, 5], pa.int32()),
+            pa.array(["a", "b", "hidden", "hidden", "c"]),
+            mask=pa.array([False, True, False]),
+        ),
+        "empty": lists([]),
+    }
+    for name, col in cases.items():
+        want = col.to_pylist()
+        offs, valid, vals = list_parts(col)
+        assert offs.dtype == np.int64, name
+        got = [
+            vals.slice(offs[i], offs[i + 1] - offs[i]).to_pylist() if valid[i] else None
+            for i in range(len(want))
+        ]
+        assert got == want, name
+        soffs, mv = string_parts(vals)
+        assert [
+            bytes(mv[soffs[i] : soffs[i + 1]]).decode() for i in range(len(vals))
+        ] == vals.to_pylist(), name
+        sizes = np.where(valid, offs[1:] - offs[:-1], 0)
+        idx, row_of = gram_windows(offs, sizes)
+        rebuilt = build_list(row_of, vals.take(pa.array(idx)), len(want))
+        assert rebuilt.to_pylist() == [r or [] for r in want], name
+        flat = [g for r in want if r for g in r]
+        assert md5_digests(vals.take(pa.array(idx))).tobytes() == b"".join(
+            hashlib.md5(g.encode()).digest() for g in flat
+        ), name
+        assert list(_gram_hash32_np(vals.take(pa.array(idx)), len(flat))) == [
+            int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in flat
+        ], name
     grams = ["x", "a b c", "héllo wörld", ""]
-    for typ, width in ((pa.string(), np.int32), (pa.large_string(), np.int64)):
-        arr = pa.array(["skip"] + grams, typ).slice(1)
-        assert list(_gram_hash32_np(arr, len(grams))) == want(grams)
-        assert np.frombuffer(arr.buffers()[1], dtype=width)[-1] > 0
-        assert list(_gram_hash32_np(pa.array(["", ""], typ), 2)) == want(["", ""])
+    for typ in (pa.string(), pa.large_string()):
+        sliced = pa.array(["skip"] + grams, typ).slice(1)
+        soffs, mv = string_parts(sliced)
+        assert [bytes(mv[soffs[i] : soffs[i + 1]]).decode() for i in range(4)] == grams
+        assert list(_gram_hash32_np(sliced, 4)) == [
+            int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in grams
+        ]
+        assert list(_gram_hash32_np(pa.array(["", ""], typ), 2)) == [
+            int(hashlib.md5(b"").hexdigest()[:8], 16)
+        ] * 2
+
+    vecs = [[1.5, -2.0, 0.25], [0.0, 3.0, -1.0], [7.0, 8.0, 9.0]]
+    vec_cases = {
+        "plain": pa.array(vecs, pa.list_(pa.float64())),
+        "sliced": pa.array([[9.0, 9.0, 9.0]] + vecs, pa.list_(pa.float64())).slice(1),
+        "chunked": pa.chunked_array(
+            [pa.array(vecs[:1], pa.list_(pa.float64())), pa.array(vecs[1:], pa.list_(pa.float64()))]
+        ),
+        "large int": pa.array([[1, -2, 3], [0, 127, -127]], pa.large_list(pa.int64())),
+        "empty": pa.array([], pa.list_(pa.float64())),
+    }
+    for name, col in vec_cases.items():
+        got = fixed_width_f64(col, 3)
+        assert got.dtype == np.float64 and got.shape == (len(col), 3), name
+        assert got.tolist() == [[float(x) for x in v] for v in col.to_pylist()], name
+    bad = {
+        "null vector": pa.array([[1.0, 2.0, 3.0], None], pa.list_(pa.float64())),
+        "ragged": pa.array([[1.0, 2.0, 3.0], [1.0, 2.0]], pa.list_(pa.float64())),
+        "null element": pa.array([[1.0, None, 3.0]], pa.list_(pa.float64())),
+    }
+    for name, col in bad.items():
+        with pytest.raises(ValueError):
+            fixed_width_f64(col, 3)
+    with pytest.raises(TypeError):
+        string_parts(pa.array([b"x"], pa.binary()))
     with pytest.raises(TypeError):
         _gram_hash32_np(pa.array([b"x"], pa.binary()), 1)
+    with pytest.raises(TypeError):
+        list_parts(pa.array(["a"]))
+
+    def py_fold(a, b):  # aggregate(zip_with) / list_dot_product order
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    rnd = random.Random(7)
+    X = np.array([[rnd.uniform(-1e3, 1e3) for _ in range(32)] for _ in range(40)])
+    C = np.array([[rnd.uniform(-1.0, 1.0) for _ in range(32)] for _ in range(9)])
+    M = seq_dot(X[:, None], C)
+    assert M.shape == (40, 9)
+    assert M.tolist() == [[py_fold(x, c) for c in C.tolist()] for x in X.tolist()]
+    assert seq_dot(X, X).tolist() == [py_fold(x, x) for x in X.tolist()]
 
 
 def test_minhash_params_deterministic_and_bounded():

@@ -166,18 +166,20 @@ def test_convergence_early_exit_matches_fixpoint(spark):
 
 def test_convergence_checkpoint_truncates_lineage(spark):
     """After a localCheckpoint the rank plan must not grow with the
-    iteration count: a 25-iteration tol run with checkpoint_every=5
-    yields a plan whose string is far smaller than the un-truncated
-    25-join tree would be (sanity bound, not an exact size pin)."""
+    iteration count: a 25-iteration run with checkpoint_every=5 — with
+    a tol that never triggers, and on the fixed-iteration path without
+    tol — yields a plan at most one checkpoint interval deep (3 joins
+    per iteration), not the un-truncated 75-join tree."""
     pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("b", "a")]
-    ranks = pagerank(
-        _edges(spark, pairs), iterations=25, tol=0.0, checkpoint_every=5
-    )
     # tol=0.0 never triggers (delta ≥ 0 but < 0.0 is false) → runs all
-    # 25 iterations; the final plan should reference a checkpointed
-    # scan, not 25 nested joins.
-    plan = ranks._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in plan or "ExistingRDD" in plan
+    # 25 iterations, as tol=None does.
+    for tol in (0.0, None):
+        ranks = pagerank(
+            _edges(spark, pairs), iterations=25, tol=tol, checkpoint_every=5
+        )
+        plan = ranks._jdf.queryExecution().logical().toString()
+        assert "LogicalRDD" in plan, tol
+        assert plan.count("Join ") <= 3 * 5, tol
 
 
 def test_pagerank_materialized_equals_session_cached(spark, sf_dir):

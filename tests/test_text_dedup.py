@@ -200,7 +200,7 @@ def test_simhash_identical_distance_zero(spark, sf_dir):
         assert by_id[i] == by_id[i + 10_000_000]
 
 
-def test_simhash_kernel_matches_expression(spark, sf_dir):
+def test_simhash_kernel_matches_expression(spark, sf_dir, arrow_var_types):
     """The Arrow numpy SimHash kernel (round 9, simhash_pairs' hot
     path) must reproduce the simhash64 EXPRESSION bit for bit on every
     fixture doc — integer-only arithmetic on both sides, so any
@@ -333,7 +333,7 @@ def test_winnow_kernel_matches_expression(spark, sf_dir, arrow_var_types):
     assert kern == expr
 
 
-def test_pos_grams_kernel_matches_expression(spark, sf_dir):
+def test_pos_grams_kernel_matches_expression(spark, sf_dir, arrow_var_types):
     """The positional-gram Arrow kernel (round 10, passage_scrub's
     gram stream) must emit the exact (id, p, gram) multiset that
     posexplode(shingles_from(_tk, n)) emits — including dropping
@@ -369,7 +369,7 @@ def test_pos_grams_kernel_matches_expression(spark, sf_dir):
     assert kern == expr
 
 
-def test_content_pairs_kernel_matches_expression(spark, sf_dir, tmp_path):
+def test_content_pairs_kernel_matches_expression(spark, sf_dir, tmp_path, arrow_var_types):
     """The Arrow content-word-pair kernel (round 10, keyword_pagerank /
     word_triangles edge builder) must emit the exact distinct canonical
     pair set the HOF chain emits: regexp-cleaned alphabetic words of
@@ -456,7 +456,7 @@ def test_content_pairs_kernel_matches_expression(spark, sf_dir, tmp_path):
     assert kern == expr
 
 
-def test_skipgram_kernel_matches_expression(spark, sf_dir):
+def test_skipgram_kernel_matches_expression(spark, sf_dir, arrow_var_types):
     """The Arrow skip-gram pair kernel (round 10) must emit the exact
     (wa, wb) pair MULTISET the sequence→transform→filter→flatten HOF
     nest emits — per-pair counts compared, not just the top-20."""
