@@ -56,17 +56,6 @@ def exact_dedup(
     return df.join(keep, id_col, "left_semi")
 
 
-def duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Fingerprint → (n_copies, keep_id); the audit view of exact_dedup."""
-    return (
-        df.select(fingerprint(text_col).alias("fp"), F.col(id_col))
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_copies"), F.min(id_col).alias("keep_id"))
-    )
-
-
 # --- MinHash + LSH ----------------------------------------------------------
 
 MERSENNE61 = (1 << 61) - 1

@@ -22,6 +22,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+# BFS levels between two localCheckpoints of the accumulated distance
+# table. Level k's plan holds level k-1's twice (the frontier and the
+# anti-join side), so an unbroken walk's plan triples per level: 1.4 MB
+# of physical-plan text at 4 levels, 136 MB at 7, and a 2 GB driver
+# runs out of heap planning level 8. A 4-hop walk (the registry's
+# bfs_hops) never checkpoints: the last level is never cut.
+BFS_CHECKPOINT_EVERY = 4
+
 
 def pagerank(
     edges: DataFrame,
@@ -90,7 +98,15 @@ def pagerank(
     `localCheckpoint`s the rank vector every `checkpoint_every`
     iterations (never on the last one): without truncation a
     60-iteration walk plans one 60-join-deep tree, bloating planning
-    time and the cost of any executor retry."""
+    time and the cost of any executor retry.
+
+    Persisted inputs: with `persist`, the node set, the contribution
+    table and the reset weights are cached. With `tol` or `eager` the
+    returned vector is already materialized, so they are released
+    before returning. The lazy fixed-iteration path returns a plan
+    that still reads them (its one final action computes every level
+    from them), so they stay cached until the session's cache is
+    cleared (``spark.catalog.clearCache()``)."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     if every_node_emits:
@@ -109,6 +125,7 @@ def pagerank(
     if persist:
         nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
         contrib = contrib.persist(StorageLevel.MEMORY_AND_DISK)
+    inputs = [nodes, contrib]
     n_nodes = nodes.count()  # materializes both persists' upstream scan
 
     if reset is not None:
@@ -117,6 +134,7 @@ def pagerank(
         ).select("node", F.coalesce(F.col("_w"), F.lit(0.0)).alias("_w"))
         if persist:
             w_df = w_df.persist(StorageLevel.MEMORY_AND_DISK)
+            inputs.append(w_df)
         base_df = w_df.select(
             "node", (F.lit(1.0 - damping) * F.col("_w")).alias("_base")
         )
@@ -179,6 +197,9 @@ def pagerank(
         ranks = new_ranks
         if delta is not None and delta < tol:
             break
+    if persist and (tol is not None or eager):
+        for df in inputs:
+            df.unpersist(blocking=False)
     return ranks
 
 
@@ -207,7 +228,11 @@ def shortest_hops(
 
     Each level's frontier is persisted: without the barrier, level k
     replays the whole k-deep lineage per action (same rationale as
-    pagerank above).
+    pagerank above). Every BFS_CHECKPOINT_EVERY levels (never on the
+    last) the accumulated table is localCheckpointed and the levels
+    folded into it are released, so the plan stays bounded at any
+    `max_hops`. The levels after the last cut stay cached: the
+    returned plan reads them.
 
     Pass ``persist_edges=False`` when the caller already persists the
     edge table (e.g. a shared per-session edge cache) — re-persisting
@@ -227,6 +252,7 @@ def shortest_hops(
     if persist:
         dist = dist.persist(StorageLevel.MEMORY_AND_DISK)
         frontier = dist.select("node")
+    levels = [dist]  # persisted relations `dist` reads
     for k in range(1, max_hops + 1):
         # The frontier (and the accumulated distance table) are
         # |V|-bounded while the edge table is |E|-sized: broadcasting
@@ -250,7 +276,16 @@ def shortest_hops(
             # of all prior levels — without materialization the plan
             # for level k re-expands every previous level's subtree.
             if new.count() == 0:
+                new.unpersist(blocking=False)
                 break
         dist = dist.union(new)
         frontier = new.select("node")
+        levels.append(new)
+        if k % BFS_CHECKPOINT_EVERY == 0 and k < max_hops:
+            dist = dist.localCheckpoint(eager=True)
+            frontier = dist.filter(F.col("dist") == k).select("node")
+            if persist:
+                for level in levels:
+                    level.unpersist(blocking=False)
+            levels = []
     return dist

@@ -108,12 +108,6 @@ def dedup_keep_first(
     return top_k_per_group(df, keys, order, k=1)
 
 
-def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Bulk rename (reference P4, SteelPred.py:139-146). Single Project
-    node via withColumnsRenamed, collapsed by Catalyst."""
-    return df.withColumnsRenamed(mapping)
-
-
 def salted_sum_count(
     df: DataFrame,
     keys: Sequence[str],

@@ -70,20 +70,6 @@ def stopword_ratio(
     return hits / F.size(toks).cast("double")
 
 
-def char_stats(text: Column | str) -> dict[str, Column]:
-    c = F.col(text) if isinstance(text, str) else text
-    n = F.length(c).cast("double")
-    nonspace = F.length(F.regexp_replace(c, r"\s", ""))
-    alpha = F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
-    digit = F.length(F.regexp_replace(c, r"[^0-9]", ""))
-    return {
-        "n_chars": F.length(c),
-        "alpha_ratio": alpha / n,
-        "digit_ratio": digit / n,
-        "space_ratio": (F.length(c) - nonspace) / n,
-    }
-
-
 def quality_score(
     text: Column | str,
     min_tokens: int = 20,
@@ -108,15 +94,6 @@ def quality_score(
         F.lit(0.0)
     )
     return (length_ok * 0.4 + stop_ok * 0.3 + wlen_ok * 0.3)
-
-
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Marker-hit count per language (the lang-ID features)."""
-    toks = tokens(text)
-    return {
-        lang: F.size(F.filter(toks, lambda w: w.isin(*markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
 
 
 def lang_scores_array(text: Column | str) -> Column:
@@ -453,22 +430,6 @@ def winnow_pair_counts(
         )
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
-    )
-
-
-def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience projection appending the full feature set."""
-    cs = char_stats(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(text_col),
-            "n_word_tokens": F.size(word_tokens(text_col)),
-            "stop_ratio": F.round(stopword_ratio(text_col), 6),
-            "quality": quality_score(text_col),
-            "lang_guess": lang_guess(text_col),
-            "fp": fingerprint(text_col),
-            "alpha_ratio": F.round(cs["alpha_ratio"], 6),
-        }
     )
 
 

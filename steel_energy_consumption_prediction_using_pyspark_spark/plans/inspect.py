@@ -63,12 +63,6 @@ def assert_broadcast_join(df: DataFrame, count: int = 1) -> None:
     assert found >= count, f"expected ≥{count} broadcast joins, got {found}:\n{plan}"
 
 
-def assert_no_shuffle(df: DataFrame) -> None:
-    """Assert the plan contains no Exchange at all (fully map-side)."""
-    plan = physical_plan(df)
-    assert "Exchange" not in plan, f"unexpected shuffle:\n{plan}"
-
-
 def assert_whole_stage_codegen(df: DataFrame) -> None:
     """Under AQE the codegen annotations only appear once the adaptive
     plan finalizes — execute first, then inspect the final plan."""

@@ -17,9 +17,9 @@ code runs correctly on local[N] for tests and on a real cluster:
   with a high initial value; AQE coalesces down.
 
 Concurrent serving: one session safely runs parallel queries from
-multiple threads — Spark's scheduler is thread-safe and the workload's
-build-once caches lock per key (workload/util.py::once_per_key,
-pinned by tests/test_concurrency.py). For latency fairness under
+multiple threads — Spark's scheduler is thread-safe and every
+session cache builds each key once under a per-key lock
+(workload/util.py::SessionCache, pinned by tests/test_concurrency.py). For latency fairness under
 concurrency, pass ``extra_conf={"spark.scheduler.mode": "FAIR"}``
 (a SparkConf — must be set at session creation, not runtime) so one
 heavy query's stages don't head-of-line-block the rest. FAIR mode

@@ -65,14 +65,6 @@ def normalize_columns(df: DataFrame) -> DataFrame:
     return df.withColumnsRenamed({o: n for o, n in renames.items() if o != n})
 
 
-# Resolved parquet schemas: (applicationId, absolute path) → (file
-# stamp and schema-shaping confs at inference, schema). Spark infers a
-# parquet schema with a footer-reading job on every read; a hit reads
-# with .schema(...) and runs none, and a stale stamp re-infers and
-# replaces the entry. Unlocked on purpose: two threads may both infer
-# a path's schema the first time, and both store the same StructType.
-# Cleared by workload/util.py::clear_session_caches.
-_SCHEMAS: dict[tuple[str, str], tuple[tuple, StructType]] = {}
 _SCHEMA_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",
@@ -114,14 +106,13 @@ def read_parquet(
     if merge_schema:
         return spark.read.option("mergeSchema", True).parquet(path)
     path = os.path.abspath(path)
-    key = (spark.sparkContext.applicationId, path)
     stamp = (_file_stamp(path), *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
-    hit = _SCHEMAS.get(key)
-    if hit is not None and hit[0] == stamp:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = (stamp, df.schema)
-    return df
+    _, schema = _SCHEMAS.get(
+        (spark.sparkContext.applicationId, path),
+        lambda: (stamp, spark.read.parquet(path).schema),
+        lambda hit: hit[0] == stamp,
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_csv(
@@ -192,3 +183,15 @@ def register_views(
     for n, df in dfs.items():
         df.createOrReplaceTempView(n)
     return dfs
+
+
+# Resolved parquet schemas: (applicationId, absolute path) → (file
+# stamp and schema-shaping confs at inference, schema). Spark infers a
+# parquet schema with a footer-reading job on every read; a hit reads
+# with .schema(...) and runs none, and a stale stamp re-infers and
+# replaces the entry. Imported last: workload/util.py's T imports
+# read_parquet, and importing the workload package runs every module
+# that reads through this one.
+from ..workload.util import SessionCache  # noqa: E402
+
+_SCHEMAS = SessionCache("parquet_schemas")

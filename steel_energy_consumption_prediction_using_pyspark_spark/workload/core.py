@@ -10,6 +10,8 @@ but the engine must provide (SURVEY §2.3, §2.5, §2.7).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -25,15 +27,14 @@ from steel_energy_consumption_prediction_using_pyspark_spark.operators.relationa
     top_k_per_group,
 )
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
+    SessionCache,
     T,
     exact_pct_sql,
     fixture_fingerprint,
-    fs_key_lock,
-    is_published,
-    key_lock,
-    publish_dir,
+    published,
     register,
     scratch_name,
+    scratch_root,
     ts_str,
 )
 
@@ -56,56 +57,33 @@ def q_scan_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is the READ path (inferSchema + header + name normalization), not the
 # write; caching the export keeps repeated driver/bench invocations
 # from re-paying it (same amortization pattern as the graph edge cache).
-_CSV_EXPORT_CACHE: dict[tuple[str, str], str] = {}
+_CSV_EXPORT_CACHE = SessionCache("csv_export")
 
 
 def _orders_csv(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fp = fixture_fingerprint(sf_dir, "orders")
-    path = _CSV_EXPORT_CACHE.get(key)
-    if path is not None and is_published(path, fp):
-        return path
-    with key_lock("csv_export", key):
-        path = _CSV_EXPORT_CACHE.get(key)
-        if path is not None and is_published(path, fp):
-            return path
-        # Invalidate BEFORE the overwrite-write: a stale entry (dir
-        # deleted externally, now being recreated) would let lock-free
-        # fast-path readers validate a half-written directory.
-        _CSV_EXPORT_CACHE.pop(key, None)
-        repo_root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        # Full-path mangle, never basename: distinct fixture dirs
-        # sharing a basename must not share a published asset
-        # (judge advice r7).
-        path = os.path.join(
-            repo_root, ".scratch", "csv_orders_" + scratch_name(sf_dir)
-        )
-
-        # Reference-style unsafe headers (dots + parens,
-        # SteelPred.py:139-146) so the normalization path is genuinely
-        # exercised by the read-back.
-        def _build(tmp: str) -> None:
-            (
-                T(spark, sf_dir, "orders")
-                .select(
-                    F.col("o_orderkey").alias("Order_Key"),
-                    F.col("o_orderpriority").alias("Order.Priority"),
-                    F.col("o_totalprice").alias("Total(Price)"),
-                )
-                .write.mode("overwrite")
-                .option("header", True)
-                .csv(tmp)
+    # Reference-style unsafe headers (dots + parens,
+    # SteelPred.py:139-146) so the normalization path is genuinely
+    # exercised by the read-back.
+    def _build(tmp: str) -> None:
+        (
+            T(spark, sf_dir, "orders")
+            .select(
+                F.col("o_orderkey").alias("Order_Key"),
+                F.col("o_orderpriority").alias("Order.Priority"),
+                F.col("o_totalprice").alias("Total(Price)"),
             )
+            .write.mode("overwrite")
+            .option("header", True)
+            .csv(tmp)
+        )
 
-        # Cross-process single build + atomic publish (VERDICT r6 #2).
-        with fs_key_lock("csv_export", os.path.basename(path)):
-            publish_dir(path, _build, app_id=key[0], fingerprint=fp)
-        _CSV_EXPORT_CACHE[key] = path
-        return path
+    return published(
+        _CSV_EXPORT_CACHE,
+        (spark.sparkContext.applicationId, sf_dir),
+        os.path.join(scratch_root(), "csv_orders_" + scratch_name(sf_dir)),
+        fixture_fingerprint(sf_dir, "orders"),
+        _build,
+    )
 
 
 def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,7 +114,7 @@ def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FMT_EXPORT_CACHE: dict[tuple[str, str, str], str] = {}
+_FMT_EXPORT_CACHE = SessionCache("fmt_export")
 
 
 def _orders_export(spark: SparkSession, sf_dir: str, fmt: str) -> str:
@@ -144,42 +122,23 @@ def _orders_export(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     .scratch/ once per (session, sf, format) — the non-CSV ingest
     twins of _orders_csv. Plain column names here: the dirty-header
     normalization path is csv_ingest's job."""
-    import os
 
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    fp = fixture_fingerprint(sf_dir, "orders")
-    path = _FMT_EXPORT_CACHE.get(key)
-    if path is not None and is_published(path, fp):
-        return path
-    with key_lock("fmt_export", key):
-        path = _FMT_EXPORT_CACHE.get(key)
-        if path is not None and is_published(path, fp):
-            return path
-        # Invalidate before the write — see _orders_csv.
-        _FMT_EXPORT_CACHE.pop(key, None)
-        repo_root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        path = os.path.join(
-            repo_root,
-            ".scratch",
-            f"{fmt}_orders_" + scratch_name(sf_dir),
+    def _build(tmp: str) -> None:
+        (
+            T(spark, sf_dir, "orders")
+            .select("o_orderkey", "o_orderpriority", "o_totalprice")
+            .write.mode("overwrite")
+            .format(fmt)
+            .save(tmp)
         )
 
-        def _build(tmp: str) -> None:
-            (
-                T(spark, sf_dir, "orders")
-                .select("o_orderkey", "o_orderpriority", "o_totalprice")
-                .write.mode("overwrite")
-                .format(fmt)
-                .save(tmp)
-            )
-
-        # Cross-process single build + atomic publish (VERDICT r6 #2).
-        with fs_key_lock("fmt_export", os.path.basename(path)):
-            publish_dir(path, _build, app_id=key[0], fingerprint=fp)
-        _FMT_EXPORT_CACHE[key] = path
-        return path
+    return published(
+        _FMT_EXPORT_CACHE,
+        (spark.sparkContext.applicationId, sf_dir, fmt),
+        os.path.join(scratch_root(), f"{fmt}_orders_" + scratch_name(sf_dir)),
+        fixture_fingerprint(sf_dir, "orders"),
+        _build,
+    )
 
 
 def q_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,7 +197,7 @@ def q_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   JSON: truncated record → ALL fields null + _corrupt;
 #         type-mismatched field → that field null, others kept.
 
-_DIRTY_CACHE: dict[tuple[str, str, str], str] = {}
+_DIRTY_CACHE = SessionCache("dirty_export")
 
 
 def _dirty_export(spark: SparkSession, sf_dir: str, kind: str) -> str:
@@ -247,37 +206,13 @@ def _dirty_export(spark: SparkSession, sf_dir: str, kind: str) -> str:
     every corrupt line is reproducible by the oracle's concatenation;
     corruption truncates BEFORE the price value, so no double→string
     formatting ever needs cross-engine agreement."""
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    fp = fixture_fingerprint(sf_dir, "orders")
-    path = _DIRTY_CACHE.get(key)
-    if path is not None and is_published(path, fp):
-        return path
-    with key_lock("dirty_export", key):
-        path = _DIRTY_CACHE.get(key)
-        if path is not None and is_published(path, fp):
-            return path
-        # Invalidate before the write — see _orders_csv.
-        _DIRTY_CACHE.pop(key, None)
-        repo_root = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
-        path = os.path.join(
-            repo_root,
-            ".scratch",
-            f"{kind}_orders_" + scratch_name(sf_dir),
-        )
-        # Cross-process single build + atomic publish (VERDICT r6 #2).
-        with fs_key_lock("dirty_export", os.path.basename(path)):
-            publish_dir(
-                path,
-                lambda tmp: _dirty_export_build(spark, sf_dir, kind, tmp),
-                app_id=key[0],
-                fingerprint=fp,
-            )
-        _DIRTY_CACHE[key] = path
-        return path
+    return published(
+        _DIRTY_CACHE,
+        (spark.sparkContext.applicationId, sf_dir, kind),
+        os.path.join(scratch_root(), f"{kind}_orders_" + scratch_name(sf_dir)),
+        fixture_fingerprint(sf_dir, "orders"),
+        lambda tmp: _dirty_export_build(spark, sf_dir, kind, tmp),
+    )
 
 
 def _dirty_export_build(

@@ -8,6 +8,7 @@ tiebreak is fully deterministic; only displayed values are rounded.
 
 from __future__ import annotations
 
+import os
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -27,14 +28,12 @@ from steel_energy_consumption_prediction_using_pyspark_spark.workload.util impor
     KMEANS_HASH_M,
     KMEANS_ITERS,
     KMEANS_MAX_TRAIN,
-    PUBLISHED_MARKER,
+    SessionCache,
     T,
     fixture_fingerprint,
-    fs_key_lock,
-    is_published,
-    key_lock,
-    once_per_key,
-    publish_dir,
+    published,
+    scratch_name,
+    scratch_root,
 )
 
 N_QUERY = 5
@@ -148,25 +147,20 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     corpus = e.filter(F.col("vec_id") >= N_QUERY)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # Cold-build semantics: always rebuild — but unpersist the
-    # superseded index first so repeated ann_ivf (or ivf_probe-then-
-    # ann_ivf) calls in one session don't leak executor cache. Takes
-    # the SAME per-key lock as _ivf_index so a concurrent probe never
-    # interleaves with the swap (worst case it rebuilds from lineage,
-    # never reads a half-replaced entry). Known, accepted trade (judge
-    # advice r6): a lock-free fast-path probe that grabbed the OLD
-    # index before this swap may execute after the unpersist — its
-    # result is still correct (recompute from lineage), just
-    # unamortized. If probe tail latency under mixed ann_ivf/probe
-    # load ever matters, swap the new entry in first and defer
-    # unpersist(blocking=False) until after the probe window.
-    with key_lock("ivf_index", key):
-        old = _IVF_CACHE.pop(key, None)
-        if old is not None:
-            old.unpersist()
-        index = S.ivf_build(corpus, n_centroids=IVF_K, seed=42, persist=True, dim=64)
-        _IVF_CACHE[key] = index
+    # Cold-build semantics: always rebuild — and release the superseded
+    # index first so repeated ann_ivf (or ivf_probe-then-ann_ivf) calls
+    # in one session don't leak executor cache. The rebuild holds the
+    # same per-key lock as _ivf_index, so a concurrent probe never reads
+    # a half-replaced entry. Known, accepted trade (judge advice r6): a
+    # lock-free fast-path probe that grabbed the OLD index before this
+    # swap may execute after the unpersist — its result is still
+    # correct (recompute from lineage), just unamortized.
+    index = _IVF_CACHE.rebuild(
+        (spark.sparkContext.applicationId, sf_dir),
+        lambda: S.ivf_build(
+            corpus, n_centroids=IVF_K, seed=42, persist=True, dim=64
+        ),
+    )
     return S.ivf_probe(index, queries, k=TOP_K, n_probe=IVF_NPROBE)
 
 
@@ -176,15 +170,14 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same caching pattern as workload/graph.py::_EDGE_CACHE). At 100 TB
 # the assigned table is parquet partitioned by list id and every probe
 # is a partition-pruned scan.
-_IVF_CACHE: dict[tuple[str, str], "S.IvfIndex"] = {}
+_IVF_CACHE = SessionCache("ivf_index", release=lambda index: index.unpersist())
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str) -> "S.IvfIndex":
     """The session IVF index, built at most once per (session, sf)
-    even under CONCURRENT queries (util.once_per_key): ivf_probe /
+    even under CONCURRENT queries (util.SessionCache): ivf_probe /
     rag / recall callers racing each other would otherwise each pay
     the k-means build and leak the losers' persisted assignments."""
-    key = (spark.sparkContext.applicationId, sf_dir)
 
     def build() -> "S.IvfIndex":
         corpus = T(spark, sf_dir, "embeddings").filter(
@@ -192,7 +185,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> "S.IvfIndex":
         )
         return S.ivf_build(corpus, n_centroids=IVF_K, seed=42, persist=True, dim=64)
 
-    return once_per_key(_IVF_CACHE, "ivf_index", key, build)
+    return _IVF_CACHE.get((spark.sparkContext.applicationId, sf_dir), build)
 
 
 def q_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1143,7 +1136,7 @@ ORACLES["pq_probe"] = ORACLES["ann_pq"]
 # to PQ: codebook training + corpus encoding amortize across query
 # batches; at 100 TB the encoded 4-int relation is the persisted
 # serving table.
-_PQ_CACHE: dict[tuple[str, str], tuple] = {}
+_PQ_CACHE = SessionCache("pq_index", release=lambda index: index[1].unpersist())
 
 
 def _pq_index(spark: SparkSession, sf_dir: str, rebuild: bool = False):
@@ -1151,24 +1144,15 @@ def _pq_index(spark: SparkSession, sf_dir: str, rebuild: bool = False):
         pq as PQ,
     )
 
+    def build():
+        corpus = T(spark, sf_dir, "embeddings").filter(
+            F.col("vec_id") >= N_QUERY
+        )
+        model = PQ.pq_train(corpus, m=8, k=32, dim=64)
+        return model, PQ.pq_encode(corpus, model).persist()
+
     key = (spark.sparkContext.applicationId, sf_dir)
-    cur = _PQ_CACHE.get(key)
-    if cur is not None and not rebuild:
-        return cur
-    with key_lock("pq_index", key):
-        cur = _PQ_CACHE.get(key)
-        if rebuild and cur is not None:
-            cur[1].unpersist()
-            _PQ_CACHE.pop(key, None)
-            cur = None
-        if cur is None:
-            e = T(spark, sf_dir, "embeddings")
-            corpus = e.filter(F.col("vec_id") >= N_QUERY)
-            model = PQ.pq_train(corpus, m=8, k=32, dim=64)
-            enc = PQ.pq_encode(corpus, model).persist()
-            cur = (model, enc)
-            _PQ_CACHE[key] = cur
-        return cur
+    return (_PQ_CACHE.rebuild if rebuild else _PQ_CACHE.get)(key, build)
 
 
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1387,10 +1371,8 @@ ORACLES["semantic_dedup"] = f"""
 
 class _LoadedIndex(NamedTuple):
     """One published index as every later probe of the session reads
-    it: the marker stamp it was loaded under, the IVF handles, and the
-    PQ model plus code relation."""
+    it: the IVF handles, and the PQ model plus code relation."""
 
-    stamp: tuple
     ivf: "S.IvfIndex"
     pq_model: object
     pq_codes: DataFrame
@@ -1400,18 +1382,11 @@ class _LoadedIndex(NamedTuple):
 # session built or validated. A hit runs no schema, head() or
 # collect() job; the entry is dropped and reloaded when the published
 # directory's marker changes (a rebuild, here or in another process).
-_DISK_INDEX: dict[tuple[str, str], _LoadedIndex] = {}
+_DISK_INDEX = SessionCache("ann_index")
 
 
 def _index_base(sf_dir: str) -> str:
-    import os
-    import re
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    suffix = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir.rstrip("/")).strip("_")
-    return os.path.join(repo_root, ".scratch", "ann_index", suffix)
+    return os.path.join(scratch_root(), "ann_index", scratch_name(sf_dir))
 
 
 def _write_ann_index(spark: SparkSession, sf_dir: str, base: str) -> None:
@@ -1488,72 +1463,38 @@ def _write_ann_index(spark: SparkSession, sf_dir: str, base: str) -> None:
             fut.result()
 
 
-def _marker_stamp(base: str) -> tuple:
-    """Identity of the published marker: a republish writes a new one."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(base, PUBLISHED_MARKER))
-    except OSError:
-        return ()
-    return (st.st_ino, st.st_mtime_ns)
-
-
 def materialized_ann_index(spark: SparkSession, sf_dir: str) -> _LoadedIndex:
     """Build-if-missing accessor (the materialized_edges contract):
     the first call per (application, sf) trains and writes the index
     and loads it; every later call — and every probe query — reuses
     the loaded handles while the published directory is unchanged.
 
-    Cross-process safe since round 7 (VERDICT r6 #2): the build runs
-    under an fcntl lockfile and publishes atomically (build into
-    .tmp.<pid>, stamp `_PUBLISHED`, rename) — two driver processes
-    sharing this .scratch warehouse get exactly ONE build, and no
-    reader can ever observe a torn index directory (pinned by
+    Cross-process safe (util.published): the build runs under an
+    fcntl lockfile and publishes atomically (build into .tmp.<pid>,
+    stamp `_PUBLISHED`, rename) — two driver processes sharing this
+    .scratch warehouse get exactly ONE build, and no reader can ever
+    observe a torn index directory (pinned by
     tests/test_cross_process.py, including an injected mid-write
     kill)."""
-    import os
-
     base = _index_base(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
+
+    def load() -> _LoadedIndex:
+        model, codes = _load_pq_disk(spark, base)
+        return _LoadedIndex(_load_ivf_disk(spark, base), model, codes)
+
     # Fingerprint covers the SOURCE fixture and the INDEX CONFIG: a
     # config bump (e.g. the r9 IVF_K 16→32 lift) must invalidate
     # published assets exactly like a fixture regeneration would —
     # otherwise a probe would read a stale 16-list index against a
     # 32-list oracle.
-    fp = f"{fixture_fingerprint(sf_dir, 'embeddings')}:ivfk{IVF_K}"
-
-    def _loaded() -> _LoadedIndex | None:
-        hit = _DISK_INDEX.get(key)
-        if (
-            hit is not None
-            and is_published(base, fp)
-            and hit.stamp == _marker_stamp(base)
-        ):
-            return hit
-        return None
-
-    hit = _loaded()
-    if hit is not None:
-        return hit
-    with key_lock("ann_disk_index", key):
-        hit = _loaded()
-        if hit is None:
-            # Invalidate before the write so no lock-free reader
-            # validates a half-written index (util.key_lock docstring).
-            _DISK_INDEX.pop(key, None)
-            with fs_key_lock("ann_index", os.path.basename(base)):
-                publish_dir(
-                    base,
-                    lambda tmp: _write_ann_index(spark, sf_dir, tmp),
-                    app_id=key[0],
-                    fingerprint=fp,
-                )
-                stamp = _marker_stamp(base)
-            model, codes = _load_pq_disk(spark, base)
-            hit = _LoadedIndex(stamp, _load_ivf_disk(spark, base), model, codes)
-            _DISK_INDEX[key] = hit
-    return hit
+    return published(
+        _DISK_INDEX,
+        (spark.sparkContext.applicationId, sf_dir),
+        base,
+        f"{fixture_fingerprint(sf_dir, 'embeddings')}:ivfk{IVF_K}",
+        lambda tmp: _write_ann_index(spark, sf_dir, tmp),
+        load,
+    )
 
 
 def _load_ivf_disk(spark: SparkSession, base: str) -> "S.IvfIndex":

@@ -3,12 +3,14 @@ never exercises: one SparkSession, many simultaneous callers).
 
 Spark's scheduler is thread-safe and a real deployment serves parallel
 queries from one session (FAIR pools exist for exactly this). What the
-ENGINE must guarantee on top is that its build-once session caches —
-IVF index, graph edge table, BPE merge table, .scratch exports — are
-safe under concurrent first-touch: exactly one thread builds, nobody
-observes a half-built entry, and no two overlapping mode("overwrite")
-writes ever target the same scratch directory. workload/util.py::
-once_per_key / key_lock provide that; these tests pin it.
+ENGINE must guarantee on top is that its session caches — every
+workload/util.py::SessionCache: IVF/PQ indexes, edge tables, BPE
+merges, scratch exports, the persisted ANN index, parquet schemas —
+are safe under concurrent first-touch: exactly one thread builds,
+nobody observes a half-built entry, and no two overlapping
+mode("overwrite") writes ever target the same scratch directory.
+SessionCache.get / key_lock provide that; these tests pin it, and that
+clear_session_caches() empties every cache and releases what it held.
 
 Correctness of VALUES never depended on the locks (builds are
 deterministic, so a lost race would still produce identical results) —
@@ -20,23 +22,33 @@ ground truth.
 
 from __future__ import annotations
 
+import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark.sql import DataFrame
+
 from steel_energy_consumption_prediction_using_pyspark_spark.workload.util import (
+    _CACHES,
+    SessionCache,
     clear_session_caches,
     key_lock,
-    once_per_key,
 )
 
 SF = "/root/testdata/sf0.001"
 
-# Queries chosen to collide on every shared cache family:
+# Queries chosen to first-touch every registered cache concurrently:
 #   ann_ivf + ivf_probe + semantic_dedup  → _IVF_CACHE (incl. the
 #       cold-rebuild swap racing two probes)
+#   ann_pq                                → _PQ_CACHE (rebuild path)
+#   ivf_probe_materialized                → _DISK_INDEX
 #   bpe_encode + token_count_bpe          → _BPE_CACHE
 #   csv_ingest / orc_ingest / jsonl_ingest → .scratch export caches
+#   csv_dirty                             → _DIRTY_CACHE
+#   signature_store_build                 → _SIG_STORE
 #   bfs_hops + ppr                        → _EDGE_CACHE
+#   graph_edges_build                     → _MATERIALIZED
+#   every parquet read                    → readers._SCHEMAS
 #   groupby_count / window_ranks          → cache-free controls
 # Duplicated names are TWO CLIENTS issuing the identical query — the
 # only way a single-key cache (one export dir per key) actually races
@@ -47,6 +59,8 @@ CONCURRENT_QUERIES = [
     "ivf_probe",
     "ivf_probe",
     "semantic_dedup",
+    "ann_pq",
+    "ivf_probe_materialized",
     "bpe_encode",
     "bpe_encode",
     "token_count_bpe",
@@ -55,17 +69,20 @@ CONCURRENT_QUERIES = [
     "orc_ingest",
     "orc_ingest",
     "jsonl_ingest",
+    "csv_dirty",
+    "signature_store_build",
     "bfs_hops",
     "ppr",
+    "graph_edges_build",
     "groupby_count",
     "window_ranks",
 ]
 
 
-def test_once_per_key_single_build_under_contention():
+def test_session_cache_single_build_under_contention():
     """16 threads racing one key: the builder runs EXACTLY once and
     every thread gets the identical object."""
-    cache: dict = {}
+    cache = SessionCache("test_ns")
     calls = []
     gate = threading.Barrier(16)
 
@@ -74,20 +91,25 @@ def test_once_per_key_single_build_under_contention():
         return object()
 
     def worker():
-        gate.wait()
-        return once_per_key(cache, "test_ns", "k", build)
+        gate.wait(timeout=30)
+        return cache.get("k", build)
 
-    with ThreadPoolExecutor(max_workers=16) as pool:
-        results = list(pool.map(lambda _: worker(), range(16)))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            results = list(pool.map(lambda _: worker(), range(16), timeout=60))
+    finally:
+        sys.setswitchinterval(interval)
     assert len(calls) == 1
     assert all(r is results[0] for r in results)
 
 
-def test_once_per_key_distinct_keys_do_not_serialize():
+def test_session_cache_distinct_keys_do_not_serialize():
     """Different keys build independently (per-key locks, not one
     global lock): two builders that each wait on the OTHER key's
     builder having started can only finish if they run concurrently."""
-    cache: dict = {}
+    cache = SessionCache("test_ns2")
     started_a = threading.Event()
     started_b = threading.Event()
 
@@ -102,8 +124,8 @@ def test_once_per_key_distinct_keys_do_not_serialize():
         return "b"
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fa = pool.submit(once_per_key, cache, "test_ns2", "ka", build_a)
-        fb = pool.submit(once_per_key, cache, "test_ns2", "kb", build_b)
+        fa = pool.submit(cache.get, "ka", build_a)
+        fb = pool.submit(cache.get, "kb", build_b)
         assert fa.result(timeout=30) == "a"
         assert fb.result(timeout=30) == "b"
 
@@ -116,6 +138,21 @@ def test_key_lock_is_stable_per_key():
 
 def _rows_sorted(df):
     return sorted(repr(r) for r in df.collect())
+
+
+def _frames(value):
+    """Every DataFrame reachable from a cache entry (tuples, lists,
+    dicts and plain object attributes)."""
+    if isinstance(value, DataFrame):
+        yield value
+    elif isinstance(value, (tuple, list)):
+        for v in value:
+            yield from _frames(v)
+    elif isinstance(value, dict):
+        for v in value.values():
+            yield from _frames(v)
+    elif hasattr(value, "__dict__"):
+        yield from _frames(vars(value))
 
 
 def test_concurrent_queries_match_sequential(spark):
@@ -150,3 +187,11 @@ def test_concurrent_queries_match_sequential(spark):
         assert got == sequential[name], (
             f"{name}: concurrent result differs from sequential"
         )
+
+    # The clear empties every registered cache and releases every
+    # DataFrame a cache held.
+    held = [f for c in _CACHES for v in c.values() for f in _frames(v)]
+    assert any(f.is_cached for f in held)
+    clear_session_caches()
+    assert [c.name for c in _CACHES if c.values()] == []
+    assert [f for f in held if f.is_cached] == []

@@ -182,6 +182,26 @@ def test_convergence_checkpoint_truncates_lineage(spark):
         assert plan.count("Join ") <= 3 * 5, tol
 
 
+def test_bfs_checkpoint_bounds_lineage(spark):
+    """A walk past a checkpoint interval plans no more than a 4-level
+    walk does: the accumulated distance table is localCheckpointed, so
+    the plan does not triple per level."""
+    from steel_energy_consumption_prediction_using_pyspark_spark.operators.graph import (
+        shortest_hops,
+    )
+
+    chain = _edges(spark, [(f"n{i}", f"n{i + 1}") for i in range(6)])
+    sources = spark.createDataFrame([("n0",)], "node string")
+    walk = shortest_hops(chain, sources, max_hops=20)
+    plan = walk._jdf.queryExecution().logical().toString()
+    four = shortest_hops(chain, sources, max_hops=4)
+    four_plan = four._jdf.queryExecution().logical().toString()
+    assert plan.count("Join ") <= four_plan.count("Join ")
+    assert sorted((r.node, r.dist) for r in walk.collect()) == [
+        (f"n{i}", i) for i in range(7)
+    ]
+
+
 def test_pagerank_materialized_equals_session_cached(spark, sf_dir):
     """Same graph, same recurrence → the materialized-table walk must
     reproduce the session-cache walk's top-20 exactly (rank rounded to

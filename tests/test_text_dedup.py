@@ -92,30 +92,38 @@ def test_exact_dedup_removes_planted(spark, sf_dir):
     assert kept.filter(F.col("doc_id") >= 10_000_000).count() == 0
 
 
-def test_minhash_banding_kernel_matches_expression(spark, sf_dir, arrow_var_types):
-    """The Arrow numpy banding kernel (round 9) must reproduce the
-    minhash_signature EXPRESSION's banded triples exactly: same affine
-    params, same int64 (a·h+b) mod M61 arithmetic, same comma-joined
-    band keys. Integer-only on both sides — any divergence is a
-    flatten/offset or packing bug."""
-    from pyspark.sql import functions as F
-
-    d = T(spark, sf_dir, "documents")
-    sh = D.shingled_sets(d)
-    kernel = sorted(map(tuple, D.minhash_banded(sh).collect()))
+@pytest.fixture(scope="module")
+def minhash_expression_triples(spark, sf_dir):
+    """The minhash_signature EXPRESSION's banded triples over the
+    fixture corpus. A pure JVM HOF expression: the Arrow string width
+    cannot change it, so both kernel runs compare against one run."""
     r = 32 // 8
+    d = T(spark, sf_dir, "documents")
     sig = d.select(
         F.col("doc_id").alias("_id"),
         D.minhash_signature("text", num_hashes=32, shingle_n=3).alias("_sig"),
     ).filter(
         F.size(D.tokens(D.normalize_text("text"))) >= 3
     )
-    expr = sorted(
+    return sorted(
         (row._id, b, ",".join(str(row._sig[b * r + i]) for i in range(r)))
         for row in sig.collect()
         for b in range(8)
     )
-    assert kernel == expr
+
+
+def test_minhash_banding_kernel_matches_expression(
+    spark, sf_dir, arrow_var_types, minhash_expression_triples
+):
+    """The Arrow numpy banding kernel (round 9) must reproduce the
+    minhash_signature EXPRESSION's banded triples exactly: same affine
+    params, same int64 (a·h+b) mod M61 arithmetic, same comma-joined
+    band keys. Integer-only on both sides — any divergence is a
+    flatten/offset or packing bug."""
+    d = T(spark, sf_dir, "documents")
+    sh = D.shingled_sets(d)
+    kernel = sorted(map(tuple, D.minhash_banded(sh).collect()))
+    assert kernel == minhash_expression_triples
 
 
 def test_minhash_lsh_finds_planted(spark, sf_dir):
